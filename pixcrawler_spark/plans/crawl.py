@@ -61,10 +61,14 @@ A round is then:
    full-frontier shuffle — only scans (which parallelize) and
    delta-sized writes.
 3. COMPACT (every ``compact_every`` rounds, idempotent): base :=
-   materialized logical; tombstones/added truncate. A crash anywhere
-   inside compaction leaves the logical view unchanged (merging an
-   already-compacted base with stale deltas is a no-op by
-   construction).
+   materialized logical; then the tombstones truncate, then ``added``.
+   A crash between any two of these writes leaves the logical view
+   unchanged: the new base already holds every live row, stale
+   ``added`` rows merge into it as no-ops, and a stale tombstone can
+   only hide a base row whose best version is still in ``added`` (a
+   retry re-enqueue is tombstoned AND re-added in the same round).
+   Truncating ``added`` first would break this — its rows would then
+   live only in the new base, under their stale tombstones.
 
 SCALE NOTES (10^10-URL frontier):
 - **No wide shuffle of any static table.** ``seen``, ``pages_ext``
@@ -78,9 +82,9 @@ SCALE NOTES (10^10-URL frontier):
   Spark's WindowGroupLimit rule run a map-side partial top-K per
   domain BEFORE the exchange — the hottest domain contributes at most
   K rows per map task to the shuffle instead of its full row count.
-  (``bench/profile_round.py`` measured the unsalted window serializing
-  18% of the corpus into one task without this.) The salted two-phase
-  variant (``salt_buckets > 1``) covers unbounded-capacity scenarios.
+  (Without this cut the unsalted window was measured serializing 18%
+  of the corpus into one task.) The salted two-phase variant
+  (``salt_buckets > 1``) covers unbounded-capacity scenarios.
 - The discovery seen-probe can be bloom-accelerated (operators/
   seen.py) when ``use_bloom`` — an INCREMENTAL persistent bitmap
   (delta-only updates per round, staleness-safe rebuild); false drops
@@ -101,11 +105,8 @@ SCALE NOTES (10^10-URL frontier):
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
-
-_TRACE = os.environ.get("PIXCRAWLER_TRACE", "") == "1"
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
@@ -163,12 +164,6 @@ class CrawlConfig:
     # engines[(depth + retry_count) % n], instead of being recorded;
     # only the exhausted attempt lands in results/seen. 0 = no retries.
     max_retries: int = 0
-    # Materialize extraction ONCE into a compact pages_ext table
-    # (url, warc_ts, text, outlinks) instead of re-running the Arrow
-    # UDF on raw html every round. Extraction is deterministic per
-    # page; this is the standard WARC→columnar prep step, and it keeps
-    # the steady-state round loop pure JVM.
-    precompute_extraction: bool = True
     # url-hash bucket count for the seen/pages_ext/frontier tables
     # (Iceberg bucket(N, url) in production). Set ≈ total cores.
     n_buckets: int = 32
@@ -479,12 +474,7 @@ class CrawlEngine:
         # fetch = join admitted against the bucketed pages table on url
         # (only the admitted delta shuffles); decision CASE replaces
         # classify_http_error (builder/_exceptions.py:216-240)
-        pext = (
-            self.ensure_pages_ext()
-            if cfg.precompute_extraction
-            else self.extracted_pages()
-        )
-        pages = pext.select(
+        pages = self.ensure_pages_ext().select(
             "url", "warc_ts", "html_absent", F.lit(True).alias("_page_exists")
         )
         fetched = admitted.join(pages, "url", "left")
@@ -527,20 +517,6 @@ class CrawlEngine:
         )
         return decided_log.unionByName(denied_log)
 
-    def plan_round(self, round_no: int) -> dict:
-        """Compatibility view over decide_plan: {'results': recorded
-        decisions, 'retry': re-enqueued frontier rows, 'frontier': the
-        input frontier}."""
-        log = self.decide_plan(round_no)
-        return {
-            "results": log.where(~F.col("will_retry")).select(
-                "url", "domain", "warc_ts", "fetch_decision", "depth",
-                "discovered_round", "round", "partition_id",
-            ),
-            "retry": self._retry_frontier(log, round_no),
-            "frontier": self.logical_frontier(round_no),
-        }
-
     def _retry_frontier(self, log: DataFrame, round_no: int) -> DataFrame:
         cfg = self.config
         next_retry = F.col("retry_count") + 1
@@ -568,11 +544,7 @@ class CrawlEngine:
             & (F.col("depth") < cfg.max_depth)
             & (~F.col("will_retry"))
         ).select("url", "depth")
-        links = (
-            self.ensure_pages_ext()
-            if cfg.precompute_extraction
-            else self.extracted_pages()
-        ).select("url", "outlinks")
+        links = self.ensure_pages_ext().select("url", "outlinks")
         next_depth = (F.col("depth") + 1).cast("int")
         # merge hint: the fetched set grows with the politeness budget —
         # a driver-built broadcast would serialize with round size; SMJ
@@ -794,16 +766,6 @@ class CrawlEngine:
     def run_round(self, round_no: int) -> dict:
         cfg = self.config
         t0 = time.monotonic()
-        _last = [t0]
-
-        def _trace(label: str) -> None:
-            if _TRACE:
-                now = time.monotonic()
-                print(
-                    f"  [round {round_no}] {label}: +{now - _last[0]:.2f}s",
-                    flush=True,
-                )
-                _last[0] = now
 
         # crash recovery (no-op on a clean run; see _recover)
         recovered = self._recover(round_no)
@@ -818,7 +780,6 @@ class CrawlEngine:
             meta={"round": round_no},
         )
         log = self.store.read("round_log")
-        _trace("decide (round_log commit)")
 
         # 2-3. MAINTAIN — independent scans of the committed log,
         # submitted as CONCURRENT Spark jobs (threads share the
@@ -995,7 +956,6 @@ class CrawlEngine:
         added_token["manifest"]["meta"]["n_tombstones"] = n_tombstones
         self.store.commit_staged(added_token)
         delta_ranked.unpersist(blocking=False)
-        _trace("maintain (concurrent delta jobs + ordered added commit)")
 
         # 4. per-round summary + metrics table commit
         wall = time.monotonic() - t0
@@ -1016,7 +976,6 @@ class CrawlEngine:
         if do_compact:
             self.compact_frontier(round_no)
             summary["compacted"] = True
-            _trace(f"compact (tombstone_ratio={tombstone_ratio:.3f})")
         return summary
 
     def _delta_new(
@@ -1050,21 +1009,22 @@ class CrawlEngine:
     def compact_frontier(self, round_no: int) -> None:
         """Materialize the logical frontier into a fresh base and
         truncate the delta tables — the amortized full write (Iceberg
-        compaction analog). Idempotent at every crash point: merging an
-        already-compacted base with stale tombstones/added rows is a
+        compaction analog). Idempotent at every crash point because the
+        tombstones truncate before ``added`` (see the module docstring):
+        merging an already-compacted base with stale deltas is then a
         no-op (anti-join misses, merge_best dedups)."""
         logical = self.logical_frontier(round_no + 1)
         self.store.overwrite(
             "frontier", logical, bucket=self._bucket, meta={"round": round_no}
         )
+        empty_removed = self.spark.createDataFrame([], REMOVED_SCHEMA)
+        self.store.overwrite(
+            "frontier_removed", empty_removed, bucket=self._bucket
+        )
         empty = self.spark.createDataFrame([], FRONTIER_SCHEMA)
         self.store.overwrite(
             "frontier_added", empty, bucket=self._bucket,
             meta={"round": round_no},
-        )
-        empty_removed = self.spark.createDataFrame([], REMOVED_SCHEMA)
-        self.store.overwrite(
-            "frontier_removed", empty_removed, bucket=self._bucket
         )
 
     def _commit_sketch_registers(self, round_no: int, log: DataFrame) -> None:
@@ -1307,21 +1267,22 @@ class CrawlEngine:
         # recovery is itself re-runnable: guard with a control status
         # (run() refuses while "recovering"), commit the rebuilt base
         # FIRST (it contains everything, so every later step is
-        # idempotent against it), then truncate the deltas and roll
-        # back the round-scoped tables
+        # idempotent against it), then truncate the deltas (tombstones
+        # before added, as in compact_frontier) and roll back the
+        # round-scoped tables
         self._set_control(status="recovering")
         self.store.overwrite(
             "frontier", next_frontier, bucket=self._bucket,
             meta={"round": from_round - 1},
         )
+        empty_removed = self.spark.createDataFrame([], REMOVED_SCHEMA)
+        self.store.overwrite(
+            "frontier_removed", empty_removed, bucket=self._bucket
+        )
         empty = self.spark.createDataFrame([], FRONTIER_SCHEMA)
         self.store.overwrite(
             "frontier_added", empty, bucket=self._bucket,
             meta={"round": from_round - 1},
-        )
-        empty_removed = self.spark.createDataFrame([], REMOVED_SCHEMA)
-        self.store.overwrite(
-            "frontier_removed", empty_removed, bucket=self._bucket
         )
         tags = {f"round-{r}" for r in range(from_round, cur + 1)}
         self.store.drop_tagged("results", tags)
@@ -1371,11 +1332,7 @@ class CrawlEngine:
         pages_ext for text/outlinks of fetched rows (the results table
         is a pure decision log; text stays normalized in pages_ext)."""
         res = self.store.read("results")
-        pext = (
-            self.ensure_pages_ext()
-            if self.config.precompute_extraction
-            else self.extracted_pages()
-        ).select("url", "text", "outlinks")
+        pext = self.ensure_pages_ext().select("url", "text", "outlinks")
         joined = res.join(pext, "url", "left")
         is_fetched = F.col("fetch_decision") == "fetched"
         return joined.select(

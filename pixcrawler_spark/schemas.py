@@ -138,8 +138,9 @@ METRICS_SCHEMA = StructType(
         StructField("n_fetched", LongType(), False),
         # discovery dedup telemetry (north rule "dedup hit-rate"):
         # raw discovered outlinks+retries vs rows that actually entered
-        # the frontier after dedup + seen-filter (per round; collected
-        # via Observation during the merge job — no extra Spark job)
+        # the frontier after dedup + seen-filter (per round; two count
+        # jobs over the persisted discovery delta, run concurrently with
+        # the other maintain jobs in CrawlEngine.run_round)
         StructField("n_discovered_raw", LongType(), False),
         StructField("n_discovered_new", LongType(), False),
         StructField("dedup_hit_rate", DoubleType(), False),

@@ -44,6 +44,7 @@ class CrawlOracle:
 
     results: list[OracleResult] = field(default_factory=list)
     seen: dict[str, int] = field(default_factory=dict)  # url -> round
+    n_requeued: int = 0  # fetch_failed rows re-enqueued for a retry
 
     def _load(self):
         pages = pq.read_table(self.pages_path).to_pydict()
@@ -168,6 +169,7 @@ class CrawlOracle:
                         "retry_count": rk,
                     }
                 )
+                self.n_requeued += 1
                 continue
             self.results.append(
                 OracleResult(url, c["domain"], decision, c["depth"], r, text, links)

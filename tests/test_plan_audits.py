@@ -67,14 +67,3 @@ def test_fairness_two_stage_reduction(spark):
     assert plan.count("Exchange SinglePartition") == 1
     assert "Join" not in plan
 
-
-def test_bench_headline_names_resolve():
-    """Every bench.py HEADLINE entry must be a registered query — a
-    rename that orphans a headline entry would make the driver's
-    per-round bench crash, which this catches at pytest time."""
-    import bench
-
-    from pixcrawler_spark.queries import REGISTRY
-
-    missing = [n for n in bench.HEADLINE if n not in REGISTRY]
-    assert not missing, missing
