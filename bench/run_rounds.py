@@ -83,7 +83,6 @@ def main() -> None:
                     help="prewarm the shard blobs untimed before each "
                     "pass (steady-state shape: ensure() is a metadata "
                     "hit; passes measure probe + delta update only)")
-    ap.add_argument("--salt-buckets", type=int, default=1)
     ap.add_argument("--no-aqe", action="store_true")
     args = ap.parse_args()
 
@@ -125,7 +124,6 @@ def main() -> None:
         max_depth=args.max_depth,
         max_rounds=1,
         use_bloom=args.use_bloom,
-        salt_buckets=args.salt_buckets,
         n_buckets=N_BUCKETS,
     )
     eng = CrawlEngine(spark, pages, robots, store, cfg, static_store=static_store)
@@ -190,8 +188,8 @@ def main() -> None:
                 json.dump(m, f)
 
     def reset_state() -> None:
-        for t in ("frontier", "frontier_added", "frontier_removed",
-                  "seen", "results", "metrics", "round_log"):
+        for t in ("frontier", "frontier_added", "seen", "results",
+                  "metrics", "round_log"):
             store.drop(t)
         ensure_state_template()
         _copy_state_table("frontier")

@@ -20,28 +20,34 @@ identical results, ordering, and seen set — the pytest oracle
 (tests/oracle.py) re-implements these semantics in straight-line
 pandas and must match exactly.
 
-ARCHITECTURE (v3 — Mercator invariant + MERGE-ON-READ frontier):
+ARCHITECTURE (v4 — Mercator invariant + MERGE-ON-READ frontier):
 
 The LOGICAL frontier keeps the invariant **unique urls, disjoint from
 the seen set** (the reference's progress-cache skip,
 builder/progress.py:84-96, enforced at enqueue time instead of per
-round), but is stored as three url-bucketed tables instead of one
+round), but is stored as two url-bucketed tables instead of one
 rewritten blob:
 
-    logical = merge_best(base ANTI removed, added)
+    logical = merge_best(base ANTI tombstones, adds)
 
-- ``frontier`` (base): immutable between compactions;
-- ``frontier_removed``: append-only (url, round) tombstones for every
-  decided url (the Iceberg delete-file analog);
-- ``frontier_added``: the accumulated discovery/retry rows since the
-  last compaction — rewritten each round, but it is delta-sized.
+- ``frontier`` (base): immutable between base writes. Every base write
+  (seed, compaction, ``recover_from_round``) stamps a fresh
+  ``base_id`` into its commit meta.
+- ``frontier_added`` (delta): everything since the last base write,
+  rewritten once per round. It holds the added discovery/retry rows
+  (``tombstone_round`` null) and one tombstone per decided url — the
+  decided row itself, with ``tombstone_round`` = the deciding round
+  (the Iceberg delete-file analog). Its commit meta carries the
+  ``base_id`` it was built on; a delta whose id does not match the
+  current base is stale, and every reader ignores it
+  (``_live_delta_meta``).
 
 ``merge_best`` distributes over per-url anti-joins, so folding each
-round's delta into ``added`` and tombstoning decided urls is EXACTLY
-equivalent to the v2 full rewrite (the pytest oracle + goldens pin
-this). All three tables share the url bucket layout, so the logical
-view is exchange-free: bucketed SMJ anti + co-bucketed full-outer
-merge, no shuffle.
+round's discoveries into the adds and tombstoning decided urls is
+EXACTLY equivalent to rewriting the whole frontier each round (the
+pytest oracle + goldens pin this). Both tables share the url bucket
+layout, so the logical view is exchange-free: bucketed SMJ anti +
+co-bucketed full-outer merge, no shuffle.
 
 A round is then:
 
@@ -53,22 +59,18 @@ A round is then:
    capacity → join admitted against the (bucketed) pages table on url
    → fetch-decision CASE. Rows the rank cuts are *politeness stalls*:
    they are simply not in the log and stay in the frontier untouched.
-2. MAINTAIN (deltas only, CONCURRENT Spark jobs): results/seen/
-   tombstone appends = scans of the committed log; ``added`` is
-   rewritten as merge_best(added ANTI log, deduped seen-filtered
-   politeness-stamped discoveries + retry re-enqueues); per-partition
-   metrics + the logical-count telemetry. NO full-frontier write, NO
-   full-frontier shuffle — only scans (which parallelize) and
-   delta-sized writes.
-3. COMPACT (every ``compact_every`` rounds, idempotent): base :=
-   materialized logical; then the tombstones truncate, then ``added``.
-   A crash between any two of these writes leaves the logical view
-   unchanged: the new base already holds every live row, stale
-   ``added`` rows merge into it as no-ops, and a stale tombstone can
-   only hide a base row whose best version is still in ``added`` (a
-   retry re-enqueue is tombstoned AND re-added in the same round).
-   Truncating ``added`` first would break this — its rows would then
-   live only in the new base, under their stale tombstones.
+2. MAINTAIN (deltas only, CONCURRENT Spark jobs): results/seen
+   appends = scans of the committed log; the delta is rewritten as
+   previous tombstones ∪ this round's decided rows as tombstones ∪
+   merge_best(adds ANTI log, deduped seen-filtered politeness-stamped
+   discoveries + retry re-enqueues); per-partition metrics + the
+   logical-count telemetry. NO full-frontier write, NO full-frontier
+   shuffle — only scans (which parallelize) and delta-sized writes.
+3. COMPACT (when tombstones exceed ``compact_ratio`` of the base, or
+   every ``compact_every`` rounds): ONE base write of the
+   materialized logical view under a new ``base_id``. The same commit
+   retires the delta (its id no longer matches), so a crash on either
+   side of it leaves the logical view unchanged.
 
 SCALE NOTES (10^10-URL frontier):
 - **No wide shuffle of any static table.** ``seen``, ``pages_ext``
@@ -82,30 +84,32 @@ SCALE NOTES (10^10-URL frontier):
   Spark's WindowGroupLimit rule run a map-side partial top-K per
   domain BEFORE the exchange — the hottest domain contributes at most
   K rows per map task to the shuffle instead of its full row count.
-  (Without this cut the unsalted window was measured serializing 18%
-  of the corpus into one task.) The salted two-phase variant
-  (``salt_buckets > 1``) covers unbounded-capacity scenarios.
+  (Without this cut the window was measured serializing 18% of the
+  corpus into one task.) Capacity is always bounded by
+  ``max_per_round``, so the literal bound always exists.
 - The discovery seen-probe can be bloom-accelerated (operators/
   seen.py) when ``use_bloom`` — an INCREMENTAL persistent bitmap
   (delta-only updates per round, staleness-safe rebuild); false drops
   impossible by construction (probe → exact confirm join).
-- Each round commits round_log/results/seen/frontier/metrics
+- Each round commits round_log/results/seen/frontier_added/metrics
   (TableStore → Iceberg in production). COMMIT ORDER makes a crashed
   round idempotent: round_log (stamped with its round) → results/seen
-  appends (computed concurrently with the frontier's data write) →
-  the frontier manifest flip (STAGED during the concurrent phase,
-  committed strictly last — the round's single commit point) →
-  metrics. Re-entry after a crash therefore sees exactly one of two
-  states: the frontier not yet advanced (roll back any partial
+  appends (computed concurrently with the delta's data write) → the
+  delta manifest flip (STAGED during the concurrent phase, committed
+  strictly last — the round's single commit point; it publishes the
+  round's tombstones and adds together and stamps the round's counts)
+  → metrics. Re-entry after a crash therefore sees exactly one of two
+  states: the delta not yet advanced (roll back any partial
   results/seen commits and re-run the deterministic decide plan), or
-  the frontier advanced (results/seen are complete by construction;
-  only metrics needs finalizing from the committed log). See
-  ``_recover``.
+  the delta advanced (results/seen are complete by construction; the
+  metrics row is rebuilt from the counts stamped in the delta's commit
+  meta). See ``_recover``.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -115,7 +119,7 @@ from pyspark.sql import functions as F
 from pixcrawler_spark.functions.text import map_in_pandas_extract
 from pixcrawler_spark.operators import politeness as pol
 from pixcrawler_spark.operators.seen import anti_join_seen
-from pixcrawler_spark.schemas import FRONTIER_SCHEMA, REMOVED_SCHEMA, SEEN_SCHEMA
+from pixcrawler_spark.schemas import FRONTIER_SCHEMA, SEEN_SCHEMA
 from pixcrawler_spark.sources.tables import TableStore
 
 ENGINE_SCORES = {"google": 1.0, "bing": 0.8, "baidu": 0.6}
@@ -144,8 +148,6 @@ class CrawlConfig:
     round_len_s: float = 10.0
     engines: tuple[str, ...] = ("google", "bing", "baidu")
     use_bloom: bool = False
-    salt_buckets: int = 1
-    seed: int = 42
     # Per-round HLL registers of decided urls per fetch decision
     # (operators/sketches.py, fast xxhash64 path), committed next to
     # the metrics row. OFF by default: the golden/oracle surface is
@@ -167,9 +169,9 @@ class CrawlConfig:
     # url-hash bucket count for the seen/pages_ext/frontier tables
     # (Iceberg bucket(N, url) in production). Set ≈ total cores.
     n_buckets: int = 32
-    # MERGE-ON-READ frontier: every round appends tombstones for
-    # decided urls and rewrites only the small `frontier_added` table;
-    # the immutable base is re-materialized (compacted) when the
+    # MERGE-ON-READ frontier: every round rewrites only the small
+    # `frontier_added` delta (adds + tombstones for decided urls); the
+    # immutable base is re-materialized (compacted) when the
     # accumulated tombstones exceed ``compact_ratio`` of the base —
     # the Iceberg delete-file/compaction pattern, triggered by the
     # quantity that actually degrades reads (tombstone anti-join
@@ -361,32 +363,52 @@ class CrawlEngine:
         return self.static_store.read("pages_ext")
 
     # -- merge-on-read frontier view ------------------------------------------
-    FRONTIER_TABLES = ("frontier", "frontier_added", "frontier_removed")
+    def _write_base(self, df: DataFrame, round_no: int) -> None:
+        """Commit ``df`` as the frontier base under a fresh ``base_id``.
+        The one commit also retires the delta: its stamped id no longer
+        matches, so readers ignore it from here on."""
+        self.store.overwrite(
+            "frontier", df, bucket=self._bucket,
+            meta={"round": round_no, "base_id": uuid.uuid4().hex},
+        )
+
+    def _live_delta_meta(self) -> dict | None:
+        """Commit meta of ``frontier_added`` if it was built on the
+        current base, else None. The one fence rule of the frontier: a
+        delta left behind by a compaction or a rollback is stale."""
+        if not self.store.exists("frontier_added"):
+            return None
+        meta = self.store.table_meta("frontier_added")
+        base_id = self.store.table_meta("frontier").get("base_id")
+        return meta if meta.get("base_id") == base_id else None
 
     def logical_frontier(self, as_of_round: int | None = None) -> DataFrame:
-        """The live frontier: merge_best(base ANTI removed, added).
+        """The live frontier: merge_best(base ANTI tombstones, adds).
 
-        ``as_of_round`` filters tombstones to ``round < as_of_round``,
-        which makes the view IMMUNE to a concurrent (or crashed)
-        round-N tombstone append — the same guard trick the seen reads
-        use (completed_round < N). All three tables are url-bucketed:
-        the anti-join and the full-outer merge are co-partitioned SMJs
-        with no exchange."""
+        ``as_of_round`` keeps only tombstones with ``tombstone_round <
+        as_of_round``, so ``recover_from_round`` sees the frontier as
+        it was before the rolled-back rounds. Both tables are
+        url-bucketed: the anti-join and the full-outer merge are
+        co-partitioned SMJs with no exchange."""
         base = self.store.read("frontier", FRONTIER_SCHEMA)
-        has_removed = self.store.exists("frontier_removed")
-        has_added = self.store.exists("frontier_added")
-        if not has_removed and not has_added:
+        if self._live_delta_meta() is None:
             return base
-        removed = self.store.read("frontier_removed", REMOVED_SCHEMA)
+        delta = self.store.read("frontier_added")
+        tombstones = delta.where(F.col("tombstone_round").isNotNull())
         if as_of_round is not None:
-            removed = removed.where(F.col("round") < as_of_round)
+            tombstones = tombstones.where(
+                F.col("tombstone_round") < as_of_round
+            )
         live = base.join(
-            removed.select("url").hint("merge"), "url", "left_anti"
+            tombstones.select("url").hint("merge"), "url", "left_anti"
         )
-        if not has_added:
-            return live
-        added = self.store.read("frontier_added", FRONTIER_SCHEMA)
-        return self._merge_best(live, added)
+        return self._merge_best(live, self._delta_adds(delta))
+
+    @staticmethod
+    def _delta_adds(delta: DataFrame) -> DataFrame:
+        return delta.where(F.col("tombstone_round").isNull()).drop(
+            "tombstone_round"
+        )
 
     def current_round(self) -> int:
         if not self.store.exists("metrics"):
@@ -439,37 +461,18 @@ class CrawlEngine:
         allowed = ruled.where(~F.col("robots_denied"))
 
         # priority admission: exact per-domain top-capacity
-        if cfg.salt_buckets > 1:
-            # two-phase salted top-k (unbounded-capacity safe): phase 1
-            # cuts each (domain, salt) shard to capacity — at most
-            # salt*capacity rows per domain reach the exact re-rank
-            salt = F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets))
-            w1 = Window.partitionBy("domain", salt.alias("_salt")).orderBy(
-                F.asc("depth"), F.desc("score"), F.asc("url")
+        w = Window.partitionBy("domain").orderBy(
+            F.asc("depth"), F.desc("score"), F.asc("url")
+        )
+        bound = self._capacity_bound()
+        admitted = (
+            allowed.withColumn("_rank", F.row_number().over(w))
+            .where(
+                (F.col("_rank") <= F.lit(bound))  # literal → WindowGroupLimit
+                & (F.col("_rank") <= pol.capacity_expr(cfg.round_len_s))
             )
-            survivors = (
-                allowed.withColumn("_prern", F.row_number().over(w1))
-                .where(F.col("_prern") <= pol.capacity_expr(cfg.round_len_s))
-                .drop("_prern")
-            )
-            admitted = (
-                pol.admit(survivors, cfg.round_len_s)
-                .where(F.col("admitted"))
-                .drop("priority_rank", "admitted")
-            )
-        else:
-            w = Window.partitionBy("domain").orderBy(
-                F.asc("depth"), F.desc("score"), F.asc("url")
-            )
-            bound = self._capacity_bound()
-            admitted = (
-                allowed.withColumn("_rank", F.row_number().over(w))
-                .where(
-                    (F.col("_rank") <= F.lit(bound))  # literal → WindowGroupLimit
-                    & (F.col("_rank") <= pol.capacity_expr(cfg.round_len_s))
-                )
-                .drop("_rank")
-            )
+            .drop("_rank")
+        )
 
         # fetch = join admitted against the bucketed pages table on url
         # (only the admitted delta shuffles); decision CASE replaces
@@ -657,14 +660,12 @@ class CrawlEngine:
           on actual crash recovery);
         - a bloom blob advanced past N-1 is harmless: extra bits only
           send more rows to the exact confirm join (probe is a
-          prefilter, never an authority);
-        - half-committed round-N tombstones in ``frontier_removed``
-          are rewritten out (they are ALSO harmless to correctness —
-          every logical_frontier read is as_of-guarded — but the
-          rewrite keeps replay appends from accumulating duplicates).
+          prefilter, never an authority).
+
+        Round-N tombstones need no rollback: they land only with the
+        delta flip, which is the commit point itself.
         """
-        fmeta = self._frontier_commit_meta()
-        if int(fmeta.get("round", -1)) >= round_no:
+        if self._committed_round() >= round_no:
             return self._finalize_metrics(round_no)
         self.store.drop_tagged("results", {f"round-{round_no}"})
         self.store.drop_tagged("metrics", {f"round-{round_no}"})
@@ -677,65 +678,34 @@ class CrawlEngine:
                     F.col("completed_round") < round_no
                 )
                 self.store.overwrite("seen", clean, bucket=self._bucket)
-        if self.store.exists("frontier_removed"):
-            mx = self.store.column_max("frontier_removed", "round")
-            if mx is not None and int(mx) >= round_no:
-                clean = self.store.read(
-                    "frontier_removed", REMOVED_SCHEMA
-                ).where(F.col("round") < round_no)
-                self.store.overwrite(
-                    "frontier_removed", clean, bucket=self._bucket
-                )
         return None
 
-    def _frontier_commit_meta(self) -> dict:
-        """The round's commit point is the ``frontier_added`` flip
-        (fresh crawls / post-compaction states stamp the base and the
-        truncated added identically; whichever is newer wins)."""
-        metas = []
-        for t in ("frontier_added", "frontier"):
-            if self.store.exists(t):
-                metas.append(int(self.store.table_meta(t).get("round", -1)))
-        return {"round": max(metas)} if metas else {}
+    def _committed_round(self) -> int:
+        """The last round whose frontier state is committed: the live
+        delta's round (the round's commit point), else the base's (a
+        fresh, compacted or rolled-back state). A stale delta must not
+        count — after ``recover_from_round`` it names a rolled-back
+        round."""
+        meta = self._live_delta_meta() or self.store.table_meta("frontier")
+        return int(meta.get("round", -1))
 
     def _finalize_metrics(self, round_no: int) -> dict:
         """Round N crashed after its frontier commit point: results,
-        seen and tombstones are complete by the commit order; recompute
-        the metrics row from the committed round_log. The input
-        frontier size was stamped into the added-table commit meta.
+        seen and tombstones are complete by the commit order, and the
+        round's counts were stamped into the delta's commit meta.
         Wall-clock of the crashed attempt is unrecoverable → 0."""
+        meta = self._live_delta_meta()
         lmeta = self.store.table_meta("round_log")
-        if int(lmeta.get("round", -1)) != round_no:
+        if meta is None or int(lmeta.get("round", -1)) != round_no:
             raise RuntimeError(
-                f"recovery invariant violated: frontier advanced to round "
-                f"{round_no} but round_log meta says {lmeta.get('round')}"
+                f"recovery invariant violated: round {round_no} is not the "
+                f"last round committed to the delta (round_log meta says "
+                f"{lmeta.get('round')})"
             )
-        n_frontier = int(
-            self.store.table_meta("frontier_added").get("n_frontier", 0)
-        )
-        log = self.store.read("round_log")
-        per_part = self._metrics_agg(log)
-        n_disc_raw = int(self._delta_expr(log, round_no).count())
-        n_disc_new = self._count_disc_new(log, round_no)
         return self._commit_metrics(
-            round_no, per_part, n_frontier, n_disc_raw, n_disc_new,
-            wall=0.0, log=log,
-        )
-
-    def _count_disc_new(self, log: DataFrame, round_no: int) -> int:
-        """Discovery-dedup telemetry: rows of the round's deduped,
-        seen-filtered delta whose url was NOT already awaiting in the
-        frontier (same quantity the v2 design derived from footer
-        counts; computed directly now that nothing rewrites the whole
-        frontier)."""
-        delta_new = self._delta_new(log, round_no)
-        remainder_urls = self.logical_frontier(round_no).select("url").join(
-            log.select("url").hint("merge"), "url", "left_anti"
-        )
-        return int(
-            delta_new.join(
-                remainder_urls.hint("merge"), "url", "left_anti"
-            ).count()
+            round_no, meta["per_part"], meta["n_frontier"],
+            meta["n_disc_raw"], meta["n_disc_new"], wall=0.0,
+            log=self.store.read("round_log"),
         )
 
     @staticmethod
@@ -785,16 +755,18 @@ class CrawlEngine:
         # submitted as CONCURRENT Spark jobs (threads share the
         # SparkSession; the scheduler interleaves their tasks). All
         # concurrent reads are guarded against the concurrent writers
-        # by round predicates (seen: completed_round < N; tombstones:
-        # round < N via logical_frontier's as_of) or by overwrite
-        # generations, so evaluation order cannot change results.
+        # by round predicates (seen: completed_round < N) or by
+        # overwrite generations (the frontier tables: the new delta is
+        # staged, not committed), so evaluation order cannot change
+        # results.
         recorded = log.where(~F.col("will_retry"))
         # resolve reads before any concurrent write
         logical_pre = self.logical_frontier(round_no)
-        added_prev = (
-            self.store.read("frontier_added", FRONTIER_SCHEMA)
-            if self.store.exists("frontier_added")
-            else self.spark.createDataFrame([], FRONTIER_SCHEMA)
+        base_id = self.store.table_meta("frontier").get("base_id")
+        prev_meta = self._live_delta_meta()
+        delta_prev = (
+            self.store.read("frontier_added") if prev_meta is not None
+            else None
         )
         seen_prev = self.store.read("seen", SEEN_SCHEMA).where(
             F.col("completed_round") < round_no
@@ -840,7 +812,7 @@ class CrawlEngine:
 
         # discovery delta: ONE evaluation serves everything — the
         # RANKED pre-dedup delta is persisted (populated when the
-        # added-rewrite job runs), so the raw-count and new-count
+        # delta-rewrite job runs), so the raw-count and new-count
         # telemetry jobs read the cache instead of re-running the
         # expansion join + window
         wdup = Window.partitionBy("url").orderBy(*_best_order())
@@ -849,68 +821,66 @@ class CrawlEngine:
             .withColumn("_rn", F.row_number().over(wdup))
             .persist()
         )
-        delta_new = self._delta_new(
-            log, round_no, seen_prev=seen_prev,
-            use_bloom=cfg.use_bloom, prebuilt=bloom_prebuilt,
-            delta_ranked=delta_ranked,
-        )
+        # the round's deduped, seen-filtered, not-just-decided
+        # discoveries
+        delta_new = anti_join_seen(
+            delta_ranked.where(F.col("_rn") == 1).drop("_rn"),
+            seen_prev, use_bloom=cfg.use_bloom, prebuilt=bloom_prebuilt,
+        ).join(recorded.select("url").hint("merge"), "url", "left_anti")
 
         # input logical-frontier size: chained arithmetically through
         # the commit metadata (n_next = n - decided + new); fresh and
         # just-compacted states are base-only, where the parquet
         # footer count is exact and free
-        prev_meta = (
-            self.store.table_meta("frontier_added")
-            if self.store.exists("frontier_added")
-            else {}
-        )
-        if "n_frontier_next" in prev_meta:
+        if prev_meta is not None:
             n_frontier = int(prev_meta["n_frontier_next"])
-            n_base = int(prev_meta.get("n_base", n_frontier))
-            n_tomb_prev = int(prev_meta.get("n_tombstones", 0))
+            n_base = int(prev_meta["n_base"])
+            n_tomb_prev = int(prev_meta["n_tombstones"])
         else:
-            # fresh or just-compacted: the base alone IS the logical
-            # frontier and carries zero tombstones
+            # fresh, compacted or rolled back: the base alone IS the
+            # logical frontier and carries zero tombstones
             n_frontier = self.store.count("frontier")
             n_base = n_frontier
             n_tomb_prev = 0
 
-        def job_removed() -> None:
-            # tombstone every decided url (retries included — their
-            # re-enqueued row re-enters through `added`); the
-            # Iceberg delete-file analog, delta-sized append
-            self.store.append(
-                "frontier_removed",
-                log.select(
-                    "url", F.lit(round_no).cast("int").alias("round")
-                ),
-                bucket=self._bucket,
-            )
-
-        def job_added_stage() -> dict:
-            # rewrite ONLY the delta-sized added table:
-            # merge_best(added ANTI log, politeness-stamped delta_new).
+        def job_delta_stage() -> dict:
+            # the round's one frontier write: previous tombstones ∪
+            # this round's decided rows as tombstones (retries included
+            # — their re-enqueued row re-enters through the adds) ∪
+            # merge_best(adds ANTI log, politeness-stamped delta_new).
             # merge_best distributes over per-url anti-joins, so this
-            # plus the tombstones is exactly the v2 full rewrite.
-            added_live = added_prev.join(
-                log.select("url").hint("merge"), "url", "left_anti"
+            # is exactly the full-frontier rewrite.
+            adds = self._with_politeness(delta_new)
+            tombstones = log.select(
+                *[f.name for f in FRONTIER_SCHEMA.fields],
+                F.col("round").alias("tombstone_round"),
             )
-            added_next = self._merge_best(
-                added_live, self._with_politeness(delta_new)
-            )
+            if delta_prev is not None:
+                adds = self._merge_best(
+                    self._delta_adds(delta_prev).join(
+                        log.select("url").hint("merge"), "url", "left_anti"
+                    ),
+                    adds,
+                )
+                tombstones = delta_prev.where(
+                    F.col("tombstone_round").isNotNull()
+                ).unionByName(tombstones)
+            delta_next = adds.withColumn(
+                "tombstone_round", F.lit(None).cast("int")
+            ).unionByName(tombstones)
             # STAGED: the data write runs now (concurrently), but the
             # manifest flip — the round's commit point — happens only
-            # after the results/seen/tombstone commits have landed.
+            # after the results/seen commits have landed.
             return self.store.stage_overwrite(
-                "frontier_added", added_next, bucket=self._bucket,
-                meta={"round": round_no},
+                "frontier_added", delta_next, bucket=self._bucket,
+                meta={"round": round_no, "base_id": base_id},
             )
 
         def job_disc_new() -> int:
             # dedup telemetry: deduped discoveries whose url was not
-            # already awaiting in the frontier (reads the as_of-guarded
-            # pre-round view, immune to the concurrent commits; the
-            # persisted delta_new makes this a cached-side anti-join)
+            # already awaiting in the frontier (reads the pre-round
+            # view, immune to the staged delta; the persisted
+            # delta_ranked makes this a cached-side anti-join)
             remainder_urls = logical_pre.select("url").join(
                 log.select("url").hint("merge"), "url", "left_anti"
             )
@@ -922,39 +892,40 @@ class CrawlEngine:
 
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=6) as pool:
+        with ThreadPoolExecutor(max_workers=5) as pool:
             f_results = pool.submit(job_results)
             f_seen = pool.submit(job_seen)
-            f_removed = pool.submit(job_removed)
-            f_added = pool.submit(job_added_stage)
+            f_delta = pool.submit(job_delta_stage)
             f_metrics = pool.submit(self._metrics_agg, log)
-            added_token = f_added.result()
-            # the two telemetry counts read the cache the added job
+            delta_token = f_delta.result()
+            # the two telemetry counts read the cache the delta job
             # just populated (submitted after it to avoid a duplicate
             # materialization race)
             f_disc_new = pool.submit(job_disc_new)
             f_disc_raw = pool.submit(delta_ranked.count)
             f_results.result()
             f_seen.result()
-            f_removed.result()
             per_part = f_metrics.result()
             n_disc_new = f_disc_new.result()
             n_disc_raw = int(f_disc_raw.result())
         n_decided_tmp = sum(r["n_processed"] for r in per_part)
-        # commit point: everything the new frontier state supersedes is
-        # durable — flip the added table (one atomic rename); stamp the
-        # input size + the arithmetic chain for the next round and for
-        # metrics finalization after a crash
-        added_token["manifest"]["meta"]["n_frontier"] = n_frontier
-        added_token["manifest"]["meta"]["n_frontier_next"] = (
-            n_frontier - n_decided_tmp + n_disc_new
-        )
-        # compaction-policy counters (chained, no Spark jobs): every
-        # decided url appended one tombstone this round
+        # compaction-policy counter (chained, no Spark job): every
+        # decided url added one tombstone this round
         n_tombstones = n_tomb_prev + n_decided_tmp
-        added_token["manifest"]["meta"]["n_base"] = n_base
-        added_token["manifest"]["meta"]["n_tombstones"] = n_tombstones
-        self.store.commit_staged(added_token)
+        # commit point: everything the new frontier state supersedes is
+        # durable — flip the delta (one atomic rename). Stamp the input
+        # size and the counter chain for the next round, and the
+        # round's counts for metrics finalization after a crash.
+        delta_token["manifest"]["meta"].update(
+            n_frontier=n_frontier,
+            n_frontier_next=n_frontier - n_decided_tmp + n_disc_new,
+            n_base=n_base,
+            n_tombstones=n_tombstones,
+            per_part=[r.asDict() for r in per_part],
+            n_disc_raw=n_disc_raw,
+            n_disc_new=n_disc_new,
+        )
+        self.store.commit_staged(delta_token)
         delta_ranked.unpersist(blocking=False)
 
         # 4. per-round summary + metrics table commit
@@ -978,54 +949,14 @@ class CrawlEngine:
             summary["compacted"] = True
         return summary
 
-    def _delta_new(
-        self,
-        log: DataFrame,
-        round_no: int,
-        seen_prev: DataFrame | None = None,
-        use_bloom: bool = False,
-        prebuilt=None,
-        delta_ranked: DataFrame | None = None,
-    ) -> DataFrame:
-        """The round's deduped, seen-filtered, not-just-decided
-        discovery delta (lazy expression). ``delta_ranked`` lets the
-        caller pass a pre-built (possibly persisted) raw delta already
-        carrying the per-url dedup rank ``_rn``."""
-        if seen_prev is None:
-            seen_prev = self.store.read("seen", SEEN_SCHEMA).where(
-                F.col("completed_round") < round_no
-            )
-        if delta_ranked is None:
-            wdup = Window.partitionBy("url").orderBy(*_best_order())
-            delta_ranked = self._delta_expr(log, round_no).withColumn(
-                "_rn", F.row_number().over(wdup)
-            )
-        recorded_urls = log.where(~F.col("will_retry")).select("url")
-        delta_best = delta_ranked.where(F.col("_rn") == 1).drop("_rn")
-        return anti_join_seen(
-            delta_best, seen_prev, use_bloom=use_bloom, prebuilt=prebuilt
-        ).join(recorded_urls.hint("merge"), "url", "left_anti")
-
     def compact_frontier(self, round_no: int) -> None:
-        """Materialize the logical frontier into a fresh base and
-        truncate the delta tables — the amortized full write (Iceberg
-        compaction analog). Idempotent at every crash point because the
-        tombstones truncate before ``added`` (see the module docstring):
-        merging an already-compacted base with stale deltas is then a
-        no-op (anti-join misses, merge_best dedups)."""
-        logical = self.logical_frontier(round_no + 1)
-        self.store.overwrite(
-            "frontier", logical, bucket=self._bucket, meta={"round": round_no}
-        )
-        empty_removed = self.spark.createDataFrame([], REMOVED_SCHEMA)
-        self.store.overwrite(
-            "frontier_removed", empty_removed, bucket=self._bucket
-        )
-        empty = self.spark.createDataFrame([], FRONTIER_SCHEMA)
-        self.store.overwrite(
-            "frontier_added", empty, bucket=self._bucket,
-            meta={"round": round_no},
-        )
+        """Materialize the logical frontier into a fresh base — the
+        amortized full write (Iceberg compaction analog). It is one
+        commit: before it the old base and the live delta hold the
+        frontier, after it the new base does, and its new ``base_id``
+        retires the delta. A crash on either side changes nothing the
+        logical view can observe."""
+        self._write_base(self.logical_frontier(round_no + 1), round_no)
 
     def _commit_sketch_registers(self, round_no: int, log: DataFrame) -> None:
         """HLL registers of this round's decided urls per fetch
@@ -1217,7 +1148,8 @@ class CrawlEngine:
           restarts for those urls).
 
         Attempts are capped (can_recover gate, max_recovery_attempts).
-        Commit order mirrors run_round: frontier flips LAST.
+        The frontier reset is one base write, committed first; a crash
+        after it is repaired by calling this again.
         """
         c = self.control()
         if c["recovery_attempts"] >= c["max_recovery_attempts"]:
@@ -1266,24 +1198,11 @@ class CrawlEngine:
         )
         # recovery is itself re-runnable: guard with a control status
         # (run() refuses while "recovering"), commit the rebuilt base
-        # FIRST (it contains everything, so every later step is
-        # idempotent against it), then truncate the deltas (tombstones
-        # before added, as in compact_frontier) and roll back the
+        # FIRST (it contains everything and retires the delta, so every
+        # later step is idempotent against it), then roll back the
         # round-scoped tables
         self._set_control(status="recovering")
-        self.store.overwrite(
-            "frontier", next_frontier, bucket=self._bucket,
-            meta={"round": from_round - 1},
-        )
-        empty_removed = self.spark.createDataFrame([], REMOVED_SCHEMA)
-        self.store.overwrite(
-            "frontier_removed", empty_removed, bucket=self._bucket
-        )
-        empty = self.spark.createDataFrame([], FRONTIER_SCHEMA)
-        self.store.overwrite(
-            "frontier_added", empty, bucket=self._bucket,
-            meta={"round": from_round - 1},
-        )
+        self._write_base(next_frontier, from_round - 1)
         tags = {f"round-{r}" for r in range(from_round, cur + 1)}
         self.store.drop_tagged("results", tags)
         self.store.drop_tagged("metrics", tags)
@@ -1302,18 +1221,16 @@ class CrawlEngine:
         """Run rounds until the frontier drains, max_rounds is hit, or
         the control blob says pause/cancel (checked at every round
         boundary). ``resume=True`` continues from the last committed
-        round — the checkpoint-equivalence contract (FIXTURES.md §4)."""
-        if not resume:
+        round — the checkpoint-equivalence contract (FIXTURES.md §4); a
+        crawl whose seed write never committed starts over."""
+        if not resume or not self.store.exists("frontier"):
             for t in (
-                "frontier", "frontier_added", "frontier_removed",
-                "seen", "results", "metrics", "round_log",
+                "frontier", "frontier_added", "seen", "results", "metrics",
+                "round_log",
             ):
                 self.store.drop(t)
             self._set_control(status="running", recovery_attempts=0)
-            self.store.overwrite(
-                "frontier", self._seed_frontier(), bucket=self._bucket,
-                meta={"round": 0},
-            )
+            self._write_base(self._seed_frontier(), 0)
             start = 1
         else:
             start = self.current_round() + 1

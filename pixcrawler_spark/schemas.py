@@ -56,6 +56,9 @@ ROBOTS_SCHEMA = StructType(
 # unbroadcastable build side or re-shuffle the frontier. Real crawler
 # frontiers (Mercator/Heritrix queues) carry their politeness key the
 # same way; a robots refresh is a periodic frontier migration job.
+# The frontier's delta table (``frontier_added``, plans/crawl.py) has
+# these columns plus ``tombstone_round``: null on an added row, the
+# deciding round on a tombstone.
 FRONTIER_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -102,16 +105,6 @@ PAGES_EXT_SCHEMA = StructType(
         StructField("text", StringType(), True),
         StructField("outlinks", ArrayType(StringType()), True),
         StructField("html_absent", BooleanType(), False),
-    ]
-)
-
-# Frontier tombstones (merge-on-read frontier: urls decided since the
-# last compaction; anti-joined against the immutable base at read
-# time — the Iceberg delete-file analog).
-REMOVED_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("round", IntegerType(), False),
     ]
 )
 

@@ -1,8 +1,12 @@
 """Crawl-engine correctness vs the pandas oracle: fetch decisions,
 crawl ordering, final URL-seen set, byte-identical extracted text,
-resume-from-checkpoint equivalence, bloom/salted-path equivalence."""
+resume-from-checkpoint equivalence, bloom-path equivalence, and crash
+recovery at every commit boundary."""
 
 from __future__ import annotations
+
+import collections
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -219,17 +223,6 @@ def test_bloom_path_equivalent(spark, fixture_dir, tmp_path_factory, seeds, engi
     assert _decisions(eng_b) == _decisions(base)
 
 
-def test_salted_admission_equivalent(spark, fixture_dir, tmp_path_factory, seeds, engine_run):
-    eng_s = _mk_engine(
-        spark, fixture_dir, tmp_path_factory.mktemp("store_salt"), seeds,
-        salt_buckets=8,
-    )
-    eng_s.run()
-    base, _ = engine_run
-    assert _seen_set(eng_s) == _seen_set(base)
-    assert _decisions(eng_s) == _decisions(base)
-
-
 def test_crash_before_frontier_commit_recovers(
     spark, fixture_dir, tmp_path_factory, seeds, engine_run, monkeypatch
 ):
@@ -347,10 +340,24 @@ def test_recovery_attempts_capped(spark, fixture_dir, tmp_path_factory, seeds):
         eng.recover_from_round(1)
 
 
+def _rows(df) -> set:
+    return set(df.collect())
+
+
+def _assert_base_is_logical(eng: CrawlEngine, reference: CrawlEngine) -> None:
+    """After a compaction the delta is retired and the base scan alone
+    is the logical frontier, row for row equal to ``reference``'s
+    merge-on-read view of the same crawl."""
+    assert eng._live_delta_meta() is None
+    base_rows = _rows(eng.store.read("frontier"))
+    assert _rows(eng.logical_frontier()) == base_rows
+    assert base_rows == _rows(reference.logical_frontier())
+
+
 def test_compaction_equivalent(spark, fixture_dir, tmp_path_factory, seeds, engine_run):
     """Merge-on-read invariant: compacting after every round (base
-    rewritten, deltas truncated) produces state identical to the
-    default amortized schedule and to the oracle-checked baseline."""
+    rewritten, delta retired) produces state identical to the default
+    amortized schedule and to the oracle-checked baseline."""
     base, _ = engine_run
     eng_c = _mk_engine(
         spark, fixture_dir, tmp_path_factory.mktemp("store_compact"), seeds,
@@ -359,14 +366,7 @@ def test_compaction_equivalent(spark, fixture_dir, tmp_path_factory, seeds, engi
     eng_c.run()
     assert _seen_set(eng_c) == _seen_set(base)
     assert _decisions(eng_c) == _decisions(base)
-    # after the final round's compaction the deltas are empty and the
-    # base alone IS the logical frontier
-    assert eng_c.store.read("frontier_added").count() == 0
-    assert eng_c.store.read("frontier_removed").count() == 0
-    n_logical = eng_c.logical_frontier().count()
-    assert n_logical == eng_c.store.read("frontier").count()
-    # and matches the uncompacted engine's logical view
-    assert n_logical == base.logical_frontier().count()
+    _assert_base_is_logical(eng_c, base)
 
 
 def test_compaction_fires_on_tombstone_ratio(
@@ -374,9 +374,10 @@ def test_compaction_fires_on_tombstone_ratio(
 ):
     """The ratio policy: with a tiny threshold every round crosses it
     (each round tombstones a politeness-bounded slice of the base), so
-    compaction fires each round and deltas stay empty; with the
-    trigger disabled it never fires. State is identical either way —
-    compaction is logically invisible."""
+    compaction fires each round and retires the delta; with the
+    trigger disabled it never fires and the live delta keeps every
+    tombstone. State is identical either way — compaction is logically
+    invisible."""
     base, base_summaries = engine_run
     eager = _mk_engine(
         spark, fixture_dir, tmp_path_factory.mktemp("store_ratio"), seeds,
@@ -385,7 +386,7 @@ def test_compaction_fires_on_tombstone_ratio(
     eager_summaries = eager.run()
     assert all(s.get("compacted") for s in eager_summaries)
     assert all("tombstone_ratio" in s for s in eager_summaries)
-    assert eager.store.read("frontier_removed").count() == 0
+    _assert_base_is_logical(eager, base)
     assert _seen_set(eager) == _seen_set(base)
     assert _decisions(eager) == _decisions(base)
 
@@ -398,7 +399,14 @@ def test_compaction_fires_on_tombstone_ratio(
     # tombstones accumulate monotonically when nothing compacts
     ratios = [s["tombstone_ratio"] for s in never_summaries]
     assert ratios == sorted(ratios) and ratios[-1] > 0
-    assert never.store.read("frontier_removed").count() > 0
+    # one tombstone per decided url, all in the live delta
+    meta = never._live_delta_meta()
+    n_tombstones = never.store.read("frontier_added").where(
+        F.col("tombstone_round").isNotNull()
+    ).count()
+    assert n_tombstones == meta["n_tombstones"] > 0
+    assert n_tombstones == sum(s["n_decided"] for s in never_summaries)
+    assert _rows(never.logical_frontier()) == _rows(base.logical_frontier())
     assert _seen_set(never) == _seen_set(base)
     assert _decisions(never) == _decisions(base)
 
@@ -427,33 +435,25 @@ def test_compaction_crash_keeps_retry_urls(
     spark, fixture_dir, tmp_path_factory, retry_seeds, retry_run,
     retry_oracle, monkeypatch,
 ):
-    """A crash between compaction's two delta truncations must not
-    change the logical frontier. A retried url is tombstoned and
-    re-added in the same round; if ``added`` were truncated first, its
-    only live row would sit in the new base under a stale tombstone
-    and the url would never be decided again."""
+    """A crash at compaction's one commit must not change the logical
+    frontier. A retried url is tombstoned and re-added in the same
+    round: with the new base not committed, its live row must stay in
+    the delta that the old base still reads through."""
     store_dir = tmp_path_factory.mktemp("store_compact_crash")
     eng = _mk_engine(
         spark, fixture_dir, store_dir, retry_seeds, compact_every=1,
         **RETRY_CFG,
     )
     orig = eng.store.overwrite
-    compaction_writes: list[str] = []
 
-    def crash_at_second_truncation(table, *args, **kwargs):
-        # a compaction rewrites the base (stamped with its round; the
-        # seed write is round 0), then truncates both delta tables
+    def crash_at_compaction(table, *args, **kwargs):
+        # a compaction writes the base stamped with its round; the seed
+        # write is round 0
         if table == "frontier" and kwargs.get("meta", {}).get("round", 0) > 0:
-            compaction_writes.append(table)
-        elif compaction_writes and table in (
-            "frontier_added", "frontier_removed"
-        ):
-            compaction_writes.append(table)
-            if len(compaction_writes) == 3:
-                raise RuntimeError("simulated crash inside compaction")
+            raise RuntimeError("simulated crash inside compaction")
         return orig(table, *args, **kwargs)
 
-    monkeypatch.setattr(eng.store, "overwrite", crash_at_second_truncation)
+    monkeypatch.setattr(eng.store, "overwrite", crash_at_compaction)
     with pytest.raises(RuntimeError, match="simulated crash"):
         eng.run()
     monkeypatch.undo()
@@ -470,6 +470,120 @@ def test_compaction_crash_keeps_retry_urls(
     assert _seen_set(eng2) == _seen_set(base)
     assert _decisions(eng2) == _decisions(base)
     assert _decisions(eng2) == _oracle_decisions(retry_oracle)
+
+
+COMMIT_METHODS = ("overwrite", "append", "commit_staged", "append_local")
+
+
+class _CrashAtNewCommit:
+    """Wraps a TableStore's commit methods and names each outermost
+    call (method, table, n-th such call in this run). Nested calls —
+    ``overwrite`` → ``commit_staged``, a table's first bucketed
+    ``append`` → ``overwrite`` — belong to the outer commit. The first
+    commit whose name is not yet in ``done`` raises before it runs and
+    is added to ``done``. Names do not depend on how the concurrent
+    results/seen appends interleave."""
+
+    def __init__(self, store: TableStore, done: set):
+        self.crashed = None
+        self._done = done
+        self._calls: collections.Counter = collections.Counter()
+        self._lock = threading.Lock()
+        self._local = threading.local()
+        for method in COMMIT_METHODS:
+            setattr(store, method, self._wrap(method, getattr(store, method)))
+
+    def _wrap(self, method, orig):
+        def commit(*args, **kwargs):
+            depth = getattr(self._local, "depth", 0)
+            if depth == 0:
+                table = args[0]["table"] if method == "commit_staged" else args[0]
+                with self._lock:
+                    name = (method, table, self._calls[method, table])
+                    self._calls[method, table] += 1
+                    if self.crashed is None and name not in self._done:
+                        self.crashed = name
+                        self._done.add(name)
+                        raise RuntimeError(f"simulated crash before {name}")
+            self._local.depth = depth + 1
+            try:
+                return orig(*args, **kwargs)
+            finally:
+                self._local.depth = depth
+
+        return commit
+
+
+def test_crash_at_every_commit_resumes(
+    spark, fixture_dir, tmp_path_factory, retry_seeds, retry_run,
+    retry_oracle,
+):
+    """Crash consistency at every commit boundary: each run crashes
+    before the first TableStore commit no earlier run crashed at, and
+    a fresh engine resumes it. The sweep ends with the first run that
+    does not crash. Retry ladder on, compaction every round; four url
+    buckets keep each of the ~26 crawls short (results do not depend
+    on the bucket count)."""
+    base, _ = retry_run
+    want_seen = {(u, r) for u, r in retry_oracle.seen.items()}
+    want_decisions = _oracle_decisions(retry_oracle)
+    assert (_seen_set(base), _decisions(base)) == (want_seen, want_decisions)
+    cfg = dict(compact_every=1, n_buckets=4, **RETRY_CFG)
+    done: set = set()
+    while True:
+        store_dir = tmp_path_factory.mktemp("store_sweep")
+        eng = _mk_engine(spark, fixture_dir, store_dir, retry_seeds, **cfg)
+        crash = _CrashAtNewCommit(eng.store, done)
+        try:
+            eng.run()
+        except RuntimeError:
+            if crash.crashed is None:
+                raise
+        if crash.crashed is None:
+            break
+        resumed = _mk_engine(spark, fixture_dir, store_dir, retry_seeds, **cfg)
+        resumed.run(resume=True)
+        assert _seen_set(resumed) == want_seen, crash.crashed
+        assert _decisions(resumed) == want_decisions, crash.crashed
+    # the run that did not crash is the uninterrupted compacting crawl
+    assert (_seen_set(eng), _decisions(eng)) == (want_seen, want_decisions)
+    # the seed and pages_ext writes, then six commits per round:
+    # round_log, results, seen, the delta flip, metrics, compaction
+    n_rounds = len(eng.store.read("metrics").select("round").distinct().collect())
+    assert len(done) == 2 + 6 * n_rounds, sorted(done)
+
+
+def test_recover_from_round_crash_reruns(
+    spark, fixture_dir, tmp_path_factory, seeds, engine_run, monkeypatch
+):
+    """A crash inside recover_from_round after its frontier write
+    leaves the control status at "recovering", so run() refuses;
+    calling recover_from_round again completes the rollback, and the
+    resumed crawl equals the uninterrupted run. Crashes right after the
+    frontier write and at the last step (the seen rewrite)."""
+    base, _ = engine_run
+    for method, table in (("drop_tagged", "results"), ("overwrite", "seen")):
+        store_dir = tmp_path_factory.mktemp("store_rec_crash")
+        eng = _mk_engine(spark, fixture_dir, store_dir, seeds, max_rounds=3)
+        eng.run()
+        orig = getattr(eng.store, method)
+
+        def crash(t, *args, _orig=orig, _table=table, **kwargs):
+            if t == _table:
+                raise RuntimeError("simulated crash inside recovery")
+            return _orig(t, *args, **kwargs)
+
+        monkeypatch.setattr(eng.store, method, crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            eng.recover_from_round(2)
+        monkeypatch.undo()
+        assert eng.store.table_meta("frontier")["round"] == 1, method
+        assert eng.control()["status"] == "recovering"
+        assert eng.run(resume=True) == []
+        eng.recover_from_round(2)
+        eng.run(resume=True)
+        assert _seen_set(eng) == _seen_set(base), method
+        assert _decisions(eng) == _decisions(base), method
 
 
 def test_multi_round_soak_invariants(spark, tmp_path):
