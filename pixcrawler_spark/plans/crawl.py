@@ -63,8 +63,10 @@ A round is then:
    appends = scans of the committed log; the delta is rewritten as
    previous tombstones ∪ this round's decided rows as tombstones ∪
    merge_best(adds ANTI log, deduped seen-filtered politeness-stamped
-   discoveries + retry re-enqueues); per-partition metrics + the
-   logical-count telemetry. NO full-frontier write, NO full-frontier
+   discoveries + retry re-enqueues); per-partition metrics. The two
+   discovery counts (raw, and new = not already waiting in the
+   remainder) are Observations on the delta write itself, so they cost
+   no job of their own. NO full-frontier write, NO full-frontier
    shuffle — only scans (which parallelize) and delta-sized writes.
 3. COMPACT (when tombstones exceed ``compact_ratio`` of the base, or
    every ``compact_every`` rounds): ONE base write of the
@@ -112,7 +114,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -120,6 +122,7 @@ from pixcrawler_spark.functions.text import map_in_pandas_extract
 from pixcrawler_spark.operators import politeness as pol
 from pixcrawler_spark.operators.seen import anti_join_seen
 from pixcrawler_spark.schemas import FRONTIER_SCHEMA, SEEN_SCHEMA
+from pixcrawler_spark.session import keep_observed_branches
 from pixcrawler_spark.sources.tables import TableStore
 
 ENGINE_SCORES = {"google": 1.0, "bing": 0.8, "baidu": 0.6}
@@ -148,17 +151,6 @@ class CrawlConfig:
     round_len_s: float = 10.0
     engines: tuple[str, ...] = ("google", "bing", "baidu")
     use_bloom: bool = False
-    # Per-round HLL registers of decided urls per fetch decision
-    # (operators/sketches.py, fast xxhash64 path), committed next to
-    # the metrics row. OFF by default: the golden/oracle surface is
-    # byte-identical with the flag off; ON adds one ≤512×decisions-row
-    # agg over the already-evaluated round log and a driver-side
-    # append. Registers merge by max(rho) at read time, so
-    # ``distinct_url_estimates()`` answers "how many DISTINCT urls has
-    # this crawl decided per outcome" over any round range without
-    # rescanning results — the telemetry the reference keeps as exact
-    # Python sets (builder/progress.py), with fixed-size state.
-    sketch_telemetry: bool = False
     # Retry ladder (reference: Retry.retry_download + ALTERNATING
     # engine strategy, builder/_generator.py:237-341): a fetch_failed
     # url with retry_count < max_retries is re-enqueued for the next
@@ -238,6 +230,8 @@ class CrawlEngine:
         redirects: DataFrame | None = None,
     ):
         config.validate()
+        # run_round reads its discovery counts from Observations
+        keep_observed_branches(spark)
         self.spark = spark
         self.config = config
         self.store = store
@@ -411,10 +405,11 @@ class CrawlEngine:
         )
 
     def current_round(self) -> int:
+        """The last round with a committed metrics row, from parquet
+        footer stats (no Spark job)."""
         if not self.store.exists("metrics"):
             return 0
-        row = self.store.read("metrics").agg(F.max("round").alias("r")).collect()[0]
-        return int(row["r"] or 0)
+        return int(self.store.column_max("metrics", "round") or 0)
 
     def _capacity_bound(self) -> int:
         """Literal global upper bound on per-domain capacity, computed
@@ -669,8 +664,6 @@ class CrawlEngine:
             return self._finalize_metrics(round_no)
         self.store.drop_tagged("results", {f"round-{round_no}"})
         self.store.drop_tagged("metrics", {f"round-{round_no}"})
-        if self.store.exists("sketch_registers"):
-            self.store.drop_tagged("sketch_registers", {f"round-{round_no}"})
         if self.store.exists("seen"):
             mx = self.store.column_max("seen", "completed_round")
             if mx is not None and int(mx) >= round_no:
@@ -705,7 +698,6 @@ class CrawlEngine:
         return self._commit_metrics(
             round_no, meta["per_part"], meta["n_frontier"],
             meta["n_disc_raw"], meta["n_disc_new"], wall=0.0,
-            log=self.store.read("round_log"),
         )
 
     @staticmethod
@@ -761,7 +753,7 @@ class CrawlEngine:
         # results.
         recorded = log.where(~F.col("will_retry"))
         # resolve reads before any concurrent write
-        logical_pre = self.logical_frontier(round_no)
+        base = self.store.read("frontier", FRONTIER_SCHEMA)
         base_id = self.store.table_meta("frontier").get("base_id")
         prev_meta = self._live_delta_meta()
         delta_prev = (
@@ -810,16 +802,16 @@ class CrawlEngine:
                     recorded.select("url"), covers_round=round_no
                 )
 
-        # discovery delta: ONE evaluation serves everything — the
-        # RANKED pre-dedup delta is persisted (populated when the
-        # delta-rewrite job runs), so the raw-count and new-count
-        # telemetry jobs read the cache instead of re-running the
-        # expansion join + window
+        # discovery telemetry rides on the delta write: the raw
+        # (pre-dedup) rows are counted as they enter the dedup window,
+        # the new ones as they leave the remainder flag join below (two
+        # Observations: no single plan node sees both row sets)
+        obs_raw, obs_new = Observation(), Observation()
         wdup = Window.partitionBy("url").orderBy(*_best_order())
         delta_ranked = (
             self._delta_expr(log, round_no)
+            .observe(obs_raw, F.count(F.lit(1)).alias("n"))
             .withColumn("_rn", F.row_number().over(wdup))
-            .persist()
         )
         # the round's deduped, seen-filtered, not-just-decided
         # discoveries
@@ -850,21 +842,37 @@ class CrawlEngine:
             # merge_best(adds ANTI log, politeness-stamped delta_new).
             # merge_best distributes over per-url anti-joins, so this
             # is exactly the full-frontier rewrite.
-            adds = self._with_politeness(delta_new)
             tombstones = log.select(
                 *[f.name for f in FRONTIER_SCHEMA.fields],
                 F.col("round").alias("tombstone_round"),
             )
             if delta_prev is not None:
-                adds = self._merge_best(
-                    self._delta_adds(delta_prev).join(
-                        log.select("url").hint("merge"), "url", "left_anti"
-                    ),
-                    adds,
+                prev_adds = self._delta_adds(delta_prev).join(
+                    log.select("url").hint("merge"), "url", "left_anti"
                 )
                 tombstones = delta_prev.where(
                     F.col("tombstone_round").isNotNull()
                 ).unionByName(tombstones)
+            # the pre-round remainder (logical frontier ANTI log) is the
+            # live base urls plus the surviving previous adds; a
+            # discovery is new unless its url was waiting there
+            waiting = base.select("url").join(
+                tombstones.select("url"), "url", "left_anti"
+            )
+            if delta_prev is not None:
+                waiting = waiting.join(
+                    prev_adds.select("url"), "url", "full_outer"
+                )
+            adds = self._with_politeness(
+                delta_new.join(
+                    waiting.withColumn("_waiting", F.lit(True)), "url", "left"
+                ).observe(
+                    obs_new,
+                    F.count(F.when(F.col("_waiting").isNull(), 1)).alias("n"),
+                )
+            )
+            if delta_prev is not None:
+                adds = self._merge_best(prev_adds, adds)
             delta_next = adds.withColumn(
                 "tombstone_round", F.lit(None).cast("int")
             ).unionByName(tombstones)
@@ -876,38 +884,20 @@ class CrawlEngine:
                 meta={"round": round_no, "base_id": base_id},
             )
 
-        def job_disc_new() -> int:
-            # dedup telemetry: deduped discoveries whose url was not
-            # already awaiting in the frontier (reads the pre-round
-            # view, immune to the staged delta; the persisted
-            # delta_ranked makes this a cached-side anti-join)
-            remainder_urls = logical_pre.select("url").join(
-                log.select("url").hint("merge"), "url", "left_anti"
-            )
-            return int(
-                delta_new.join(
-                    remainder_urls.hint("merge"), "url", "left_anti"
-                ).count()
-            )
-
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=5) as pool:
+        with ThreadPoolExecutor(max_workers=4) as pool:
             f_results = pool.submit(job_results)
             f_seen = pool.submit(job_seen)
             f_delta = pool.submit(job_delta_stage)
             f_metrics = pool.submit(self._metrics_agg, log)
             delta_token = f_delta.result()
-            # the two telemetry counts read the cache the delta job
-            # just populated (submitted after it to avoid a duplicate
-            # materialization race)
-            f_disc_new = pool.submit(job_disc_new)
-            f_disc_raw = pool.submit(delta_ranked.count)
             f_results.result()
             f_seen.result()
             per_part = f_metrics.result()
-            n_disc_new = f_disc_new.result()
-            n_disc_raw = int(f_disc_raw.result())
+        # the delta write has returned, so both observations are filled
+        n_disc_raw = int(obs_raw.get["n"])
+        n_disc_new = int(obs_new.get["n"])
         n_decided_tmp = sum(r["n_processed"] for r in per_part)
         # compaction-policy counter (chained, no Spark job): every
         # decided url added one tombstone this round
@@ -926,14 +916,12 @@ class CrawlEngine:
             n_disc_new=n_disc_new,
         )
         self.store.commit_staged(delta_token)
-        delta_ranked.unpersist(blocking=False)
 
         # 4. per-round summary + metrics table commit
         wall = time.monotonic() - t0
         tombstone_ratio = n_tombstones / n_base if n_base > 0 else 0.0
         summary = self._commit_metrics(
-            round_no, per_part, n_frontier, n_disc_raw, n_disc_new, wall,
-            log=log,
+            round_no, per_part, n_frontier, n_disc_raw, n_disc_new, wall
         )
         summary["tombstone_ratio"] = round(tombstone_ratio, 4)
         # 5. compaction (idempotent; outside the recovery-critical
@@ -958,70 +946,6 @@ class CrawlEngine:
         logical view can observe."""
         self._write_base(self.logical_frontier(round_no + 1), round_no)
 
-    def _commit_sketch_registers(self, round_no: int, log: DataFrame) -> None:
-        """HLL registers of this round's decided urls per fetch
-        decision (cfg.sketch_telemetry). One small agg over the
-        already-evaluated round log — ≤ 512 × decisions rows — then a
-        driver-side pyarrow append tagged like the metrics row, so
-        crash recovery rolls both back together."""
-        from pixcrawler_spark.operators import sketches as sk
-        from pixcrawler_spark.schemas import SKETCH_REGISTERS_SCHEMA
-
-        regs = sk.hll_registers(
-            log, ["fetch_decision"], F.col("url"), fast=True
-        ).collect()
-        rows = [
-            (round_no, r["fetch_decision"], int(r["bucket"]), int(r["rho"]))
-            for r in regs
-        ]
-        if rows:
-            self.store.append_local(
-                "sketch_registers",
-                rows,
-                SKETCH_REGISTERS_SCHEMA,
-                tag=f"round-{round_no}",
-            )
-
-    def distinct_url_estimates(self) -> DataFrame:
-        """Cumulative DISTINCT decided urls per fetch decision across
-        all rounds, folded from the stored registers (max-merge) —
-        never rescans results. Requires cfg.sketch_telemetry runs."""
-        from pixcrawler_spark.operators import sketches as sk
-        from pixcrawler_spark.schemas import SKETCH_REGISTERS_SCHEMA
-
-        regs = self.store.read("sketch_registers", SKETCH_REGISTERS_SCHEMA)
-        merged = regs.groupBy("fetch_decision", "bucket").agg(
-            F.max("rho").alias("rho")
-        )
-        return sk.hll_estimate(merged, ["fetch_decision"])
-
-    def compact_sketch_registers(self, upto_round: int) -> None:
-        """Fold all register rows with round <= upto_round into one
-        baseline row set stamped round=upto_round (max-merge is
-        associative, so folded-then-merged estimates are IDENTICAL to
-        unfolded — asserted in tests). Bounds the table at
-        512 x decisions x (baseline + recent rounds) instead of
-        growing per round forever; like the snapshot-expiration
-        maintenance pass, run it only for rounds OLDER than the crash-
-        recovery horizon (the current round's tagged rows must stay
-        individually droppable)."""
-        from pixcrawler_spark.schemas import SKETCH_REGISTERS_SCHEMA
-
-        regs = self.store.read("sketch_registers", SKETCH_REGISTERS_SCHEMA)
-        old = regs.where(F.col("round") <= upto_round)
-        folded = old.groupBy("fetch_decision", "bucket").agg(
-            F.max("rho").alias("rho")
-        ).select(
-            F.lit(upto_round).cast("int").alias("round"),
-            "fetch_decision",
-            "bucket",
-            "rho",
-        )
-        keep = regs.where(F.col("round") > upto_round)
-        self.store.overwrite(
-            "sketch_registers", folded.unionByName(keep)
-        )
-
     def _commit_metrics(
         self,
         round_no: int,
@@ -1030,7 +954,6 @@ class CrawlEngine:
         n_disc_raw: int,
         n_disc_new: int,
         wall: float,
-        log: DataFrame | None = None,
     ) -> dict:
         n_decided = sum(r["n_processed"] for r in per_part)
         n_denied = sum(r["n_robots_denied"] for r in per_part)
@@ -1071,8 +994,6 @@ class CrawlEngine:
         self.store.append_local(
             "metrics", metrics_rows, METRICS_SCHEMA, tag=f"round-{round_no}"
         )
-        if log is not None and self.config.sketch_telemetry:
-            self._commit_sketch_registers(round_no, log)
         return {
             "round": round_no,
             "n_frontier": n_frontier,
@@ -1206,8 +1127,6 @@ class CrawlEngine:
         tags = {f"round-{r}" for r in range(from_round, cur + 1)}
         self.store.drop_tagged("results", tags)
         self.store.drop_tagged("metrics", tags)
-        if self.store.exists("sketch_registers"):
-            self.store.drop_tagged("sketch_registers", tags)
         clean_seen = self.store.read("seen", SEEN_SCHEMA).where(
             F.col("completed_round") < from_round
         )

@@ -131,9 +131,8 @@ METRICS_SCHEMA = StructType(
         StructField("n_fetched", LongType(), False),
         # discovery dedup telemetry (north rule "dedup hit-rate"):
         # raw discovered outlinks+retries vs rows that actually entered
-        # the frontier after dedup + seen-filter (per round; two count
-        # jobs over the persisted discovery delta, run concurrently with
-        # the other maintain jobs in CrawlEngine.run_round)
+        # the frontier after dedup + seen-filter (per round; observed
+        # on the frontier-delta write in CrawlEngine.run_round)
         StructField("n_discovered_raw", LongType(), False),
         StructField("n_discovered_new", LongType(), False),
         StructField("dedup_hit_rate", DoubleType(), False),
@@ -181,17 +180,3 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-
-# Per-round HyperLogLog registers of decided urls, grouped by fetch
-# decision (plans/crawl.py sketch telemetry, cfg.sketch_telemetry).
-# Registers are STORED rather than estimates so rounds merge by
-# max(rho) at read time — cumulative distinct counts across any round
-# range without rescanning results.
-SKETCH_REGISTERS_SCHEMA = StructType(
-    [
-        StructField("round", IntegerType(), False),
-        StructField("fetch_decision", StringType(), False),
-        StructField("bucket", LongType(), False),
-        StructField("rho", IntegerType(), False),
-    ]
-)

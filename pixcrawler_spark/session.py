@@ -78,20 +78,45 @@ EXCLUDED_OPTIMIZER_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
 
+# The crawl round takes its discovery counts from Observations on the
+# frontier-delta write. When a shuffle stage comes back empty, this AQE
+# rule replaces the plan above it with an empty relation, and an
+# Observation below that point loses its metrics (Spark 4.1 then
+# completes it with an empty row): e.g. every discovery was already
+# seen, so the raw-count node upstream of the seen filter vanishes.
+EXCLUDED_AQE_RULES = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
+
+
+def _exclude_rule(spark: SparkSession, key: str, rule: str) -> None:
+    """Add ``rule`` to the comma-separated exclusion list ``key``,
+    MERGED with any exclusions the caller already configured —
+    overwriting would silently re-enable their rules."""
+    current = spark.conf.get(key, None)
+    rules = [r for r in (current or "").split(",") if r]
+    if rule not in rules:
+        rules.append(rule)
+    spark.conf.set(key, ",".join(rules))
+
+
+def keep_observed_branches(spark: SparkSession) -> None:
+    """Make every Observation on a plan report its metrics, even when
+    an upstream stage is empty (see EXCLUDED_AQE_RULES)."""
+    _exclude_rule(
+        spark, "spark.sql.adaptive.optimizer.excludedRules", EXCLUDED_AQE_RULES
+    )
+
 
 def tune_session(spark: SparkSession) -> None:
     """Apply the engine's runtime-settable tuning to ANY session —
     including one the correctness/bench driver built itself (the query
     registry calls this from every query fn, idempotently)."""
     try:
-        # MERGE with any exclusions the caller already configured —
-        # overwriting would silently re-enable their rules (this runs
-        # before every registered query fn)
-        current = spark.conf.get("spark.sql.optimizer.excludedRules", None)
-        rules = [r for r in (current or "").split(",") if r]
-        if EXCLUDED_OPTIMIZER_RULES not in rules:
-            rules.append(EXCLUDED_OPTIMIZER_RULES)
-        spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
+        # runs before every registered query fn, so it must be idempotent
+        _exclude_rule(
+            spark, "spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES
+        )
     except Exception:
         pass  # conf locked down → queries still correct, just slower
     try:

@@ -45,6 +45,8 @@ class CrawlOracle:
     results: list[OracleResult] = field(default_factory=list)
     seen: dict[str, int] = field(default_factory=dict)  # url -> round
     n_requeued: int = 0  # fetch_failed rows re-enqueued for a retry
+    # per-round counters, one dict per executed round
+    rounds: list[dict] = field(default_factory=list)
 
     def _load(self):
         pages = pq.read_table(self.pages_path).to_pydict()
@@ -190,7 +192,17 @@ class CrawlOracle:
                             "retry_count": 0,
                         }
                     )
-        return stalled + discovered + retries
+        nxt = stalled + discovered + retries
+        self.rounds.append(
+            {
+                "n_frontier": len(unseen),
+                "n_decided": len(denied) + len(admitted),
+                "n_discovered_raw": len(discovered) + len(retries),
+                # the next round's deduped, seen-filtered frontier
+                "n_frontier_next": len({c["url"] for c in nxt} - self.seen.keys()),
+            }
+        )
+        return nxt
 
     # -- contract views ---------------------------------------------------
     def ordering(self) -> set[tuple]:

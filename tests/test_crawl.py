@@ -9,6 +9,7 @@ import collections
 import threading
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from pixcrawler_spark.fixtures import (
@@ -631,81 +632,64 @@ def test_multi_round_soak_invariants(spark, tmp_path):
     assert ns == nr
 
 
-def test_sketch_telemetry_registers(
-    spark, fixture_dir, tmp_path_factory, seeds, engine_run
+@pytest.mark.parametrize("max_depth", [2, 3])
+def test_round_counts_match_oracle(
+    spark, fixture_dir, tmp_path_factory, retry_seeds, max_depth
 ):
-    """cfg.sketch_telemetry=True commits per-round HLL registers next
-    to the metrics row; the folded estimate tracks the exact distinct
-    decided-url count per fetch decision. Default runs (engine_run)
-    must not create the table at all."""
-    eng_base, _ = engine_run
-    assert not eng_base.store.exists("sketch_registers")
-
+    """Per-round n_frontier / n_decided / n_discovered_raw /
+    n_discovered_new of a non-compacting retry crawl equal the oracle's
+    counters, so the n_frontier chain through the delta's commit meta
+    is checked across rounds. At max_depth 2 the last round decides
+    only depth-2 and exhausted-retry urls: its discovery delta is
+    empty, and its counts must come back 0/0. At max_depth 3 later
+    rounds re-discover urls still waiting among the delta's adds,
+    which must not count as new."""
     eng = _mk_engine(
-        spark,
-        fixture_dir,
-        tmp_path_factory.mktemp("store_sketch"),
-        seeds,
-        sketch_telemetry=True,
+        spark, fixture_dir, tmp_path_factory.mktemp("store_counts"),
+        retry_seeds, max_depth=max_depth, compact_ratio=0, compact_every=0,
+        **RETRY_CFG,
     )
-    eng.run()
-    assert eng.store.exists("sketch_registers")
-    regs = eng.store.read("sketch_registers")
-    n_rounds = regs.select("round").distinct().count()
-    assert n_rounds >= 2  # one commit per executed round
-    est = {
-        r["fetch_decision"]: r["hll_distinct"]
-        for r in eng.distinct_url_estimates().collect()
-    }
-    exact = {
-        r["fetch_decision"]: r["c"]
-        for r in eng.store.read("results")
-        .groupBy("fetch_decision")
-        .agg(F.countDistinct("url").alias("c"))
-        .collect()
-    }
-    # results only holds final (non-retry) decisions; every decision
-    # recorded there must have a register group with a sane estimate
-    for decision, c in exact.items():
-        assert decision in est, (decision, est)
-        if c >= 20:
-            assert abs(est[decision] - c) / c < 0.25, (decision, est[decision], c)
-    # the decisions log can contain more outcomes (retries) than
-    # results — estimates must exist and be positive for all groups
-    assert all(v > 0 for v in est.values())
+    summaries = eng.run()
+    o = _mk_oracle(fixture_dir, retry_seeds, max_depth=max_depth, **RETRY_CFG)
+    keys = ("n_frontier", "n_decided", "n_discovered_raw", "n_discovered_new")
+    got = [tuple(s[k] for k in keys) for s in summaries]
+    want = [
+        (
+            r["n_frontier"],
+            r["n_decided"],
+            r["n_discovered_raw"],
+            # the next frontier is this round's stalled rows plus the
+            # new discoveries
+            r["n_frontier_next"] - (r["n_frontier"] - r["n_decided"]),
+        )
+        for r in o.rounds
+        if r["n_frontier"] > 0
+    ]
+    assert got == want
+    assert not any(s.get("compacted") for s in summaries)
+    assert any(s["n_retrying"] > 0 for s in summaries)
+    if max_depth == 2:
+        assert got[-1][2:] == (0, 0)
 
 
-def test_sketch_register_compaction(
-    spark, fixture_dir, tmp_path_factory, seeds
-):
-    """Folding old rounds' registers into a baseline is lossless for
-    the estimates (max-merge associativity) and shrinks the table."""
-    eng = _mk_engine(
-        spark,
-        fixture_dir,
-        tmp_path_factory.mktemp("store_sketch_compact"),
-        seeds,
-        sketch_telemetry=True,
+def test_observation_survives_empty_stage(spark, fixture_dir, tmp_path):
+    """A count observed upstream of a shuffle stage that comes back
+    empty is still reported once a CrawlEngine has configured the
+    session: the raw discovery count of a round whose discoveries were
+    all already seen has exactly this shape."""
+    spark.conf.unset("spark.sql.adaptive.optimizer.excludedRules")
+    eng = _mk_engine(spark, fixture_dir, tmp_path, ["http://unused/"])
+    raw_obs, new_obs = Observation(), Observation()
+    raw = spark.range(100).select(
+        (F.col("id") % 7).cast("string").alias("url")
+    ).observe(raw_obs, F.count(F.lit(1)).alias("n"))
+    seen = spark.range(7).select(F.col("id").cast("string").alias("url"))
+    new = (
+        raw.dropDuplicates(["url"])
+        .join(seen, "url", "left_anti")
+        .repartition(5, "url")  # an empty shuffle stage
+        .observe(new_obs, F.count(F.lit(1)).alias("n"))
     )
-    eng.run()
-    before = {
-        r["fetch_decision"]: r["hll_distinct"]
-        for r in eng.distinct_url_estimates().collect()
-    }
-    n_before = eng.store.count("sketch_registers")
-    max_round = eng.store.read("sketch_registers").agg(
-        F.max("round")
-    ).collect()[0][0]
-    eng.compact_sketch_registers(upto_round=max_round - 1)
-    after = {
-        r["fetch_decision"]: r["hll_distinct"]
-        for r in eng.distinct_url_estimates().collect()
-    }
-    n_after = eng.store.count("sketch_registers")
-    assert after == before  # bit-identical estimates
-    assert n_after <= n_before
-    rounds = {
-        r["round"]
-        for r in eng.store.read("sketch_registers").select("round").distinct().collect()
-    }
-    assert rounds <= {max_round - 1, max_round}
+    eng.store.overwrite("observed", new, bucket=(("url",), 4))
+    assert raw_obs.get == {"n": 100}
+    assert new_obs.get == {"n": 0}
