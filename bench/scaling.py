@@ -403,7 +403,7 @@ host windows where the physical ceiling is ~1.0 — gated-out windows
   table store use tmpfs — the stand-in for the node-local NVMe each
   real executor owns.
 
-One-time extraction materialization (Arrow pandas UDF over html),
+One-time extraction materialization (JVM regex expressions over html),
 primary scale: local[{prim['small']}] best {prim['extract_small']:.1f}s,
 local[{prim['large']}] best {prim['extract_large']:.1f}s.
 

@@ -2,22 +2,18 @@
 invariant (BASELINE.json input_hint: "byte-identical extracted text
 per url").
 
-The extraction ORACLE is `extract_text_py` / `extract_outlinks_py`
-(pure Python over one bytes value); the fixture generator writes the
-pages table so that ``pages.text == extract_text_py(pages.html)`` for
-every url, and tests assert the Spark UDF reproduces it byte-for-byte.
-
-Spark side is an Arrow-batched pandas UDF (no per-row Python in the
-engine hot path — one Python call per ~10k-row Arrow batch, vectorized
-pandas str ops inside). Reference analog: the parser stage of the
-icrawler feeder/parser/downloader pipeline (builder/_engine.py:542-578
-wraps parsers; here parsing is deterministic regex extraction).
+The engine extracts with JVM expressions (``CrawlEngine.
+extracted_pages``: ``regexp_extract_all`` over ``make_valid_utf8`` of
+the body), with no Python evaluation. ``extract_text_py`` /
+``extract_outlinks_py`` below are its reference: pure Python over one
+bytes value. The fixture generator writes the pages table so that
+``pages.text == extract_text_py(pages.html)`` for every url, and tests
+assert the engine reproduces both functions byte-for-byte.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -52,57 +48,11 @@ def extract_outlinks_py(html: bytes | None) -> list[str] | None:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized Spark UDFs (Arrow batches)
-# ---------------------------------------------------------------------------
-def _extract_text_batch(s: pd.Series) -> pd.Series:
-    return s.map(extract_text_py)
-
-
-def _extract_outlinks_batch(s: pd.Series) -> pd.Series:
-    return s.map(extract_outlinks_py)
-
-
-extract_text_udf = F.pandas_udf(_extract_text_batch, StringType())
-extract_outlinks_udf = F.pandas_udf(_extract_outlinks_batch, ArrayType(StringType()))
-
-
-def with_extraction(df, html_col: str = "html"):
-    """Append ``extracted_text`` and ``outlinks`` columns (one Arrow
-    round-trip for both via a single struct-returning pass would save
-    a serialization; kept as two named UDFs for plan readability —
-    Spark batches them into one Python runner stage anyway)."""
-    return df.withColumns(
-        {
-            "extracted_text": extract_text_udf(F.col(html_col)),
-            "outlinks": extract_outlinks_udf(F.col(html_col)),
-        }
-    )
-
-
-def map_in_pandas_extract(df, html_col: str = "html"):
-    """Alternative mapInPandas extraction keeping all other columns —
-    used by the crawl round where the fetch join already materialized
-    the page row. Single Python stage, one pass per partition."""
-    schema_str = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    out_schema = f"{schema_str}, extracted_text string, outlinks array<string>"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["extracted_text"] = pdf[html_col].map(extract_text_py)
-            pdf["outlinks"] = pdf[html_col].map(extract_outlinks_py)
-            yield pdf
-
-    return df.mapInPandas(gen, out_schema)
-
-
-# ---------------------------------------------------------------------------
 # Anchor-text extraction (href + link text pairs)
 # ---------------------------------------------------------------------------
 # The web-graph relevance signal outlink extraction drops: WHAT the
-# linking page calls the target. Same oracle/UDF discipline as above.
+# linking page calls the target. A Python oracle plus the Arrow UDF
+# that the registry's anchor-text query runs.
 _ANCHOR_RE = re.compile(rb'<a href="([^"]*)"[^>]*>(.*?)</a>', re.DOTALL)
 
 

@@ -118,7 +118,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pixcrawler_spark.functions.text import map_in_pandas_extract
 from pixcrawler_spark.operators import politeness as pol
 from pixcrawler_spark.operators.seen import anti_join_seen
 from pixcrawler_spark.schemas import FRONTIER_SCHEMA, SEEN_SCHEMA
@@ -335,14 +334,35 @@ class CrawlEngine:
         )
 
     def extracted_pages(self) -> DataFrame:
-        """Pages with text/outlinks extracted (Arrow-batched UDF) and
-        html dropped: (url, warc_ts, text, outlinks, html_absent)."""
-        ext = map_in_pandas_extract(self.pages.select("url", "warc_ts", "html"))
-        return ext.select(
+        """Pages with text/outlinks extracted and html dropped:
+        (url, warc_ts, text, outlinks, html_absent).
+
+        Catalyst expressions only, no Python evaluation: the same
+        regexes as ``extract_text_py``/``extract_outlinks_py`` run over
+        the body decoded with ``make_valid_utf8``, which replaces
+        invalid UTF-8 exactly as Python's ``errors="replace"`` does (a
+        plain cast does not). Extraction runs after a hash exchange on
+        url, which the bucketed ``pages_ext`` write reuses, so it is
+        spread over the bucket reducers instead of the input splits."""
+        pages = self.pages.select("url", "warc_ts", "html").repartition(
+            self.config.n_buckets, "url"
+        )
+        s = F.make_valid_utf8(F.col("html").cast("string"))
+
+        def matches(pattern: str):
+            return F.regexp_extract_all(s, F.lit(pattern), 1)
+
+        return pages.select(
             "url",
             "warc_ts",
-            F.col("extracted_text").alias("text"),
-            "outlinks",
+            F.array_join(
+                F.concat(
+                    matches(r"(?s)<title>(.*?)</title>"),
+                    matches(r"(?s)<p>(.*?)</p>"),
+                ),
+                "\n",
+            ).alias("text"),
+            matches(r'<a href="([^"]*)"').alias("outlinks"),
             F.col("html").isNull().alias("html_absent"),
         )
 

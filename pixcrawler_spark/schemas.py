@@ -97,17 +97,6 @@ RESULTS_SCHEMA = StructType(
     ]
 )
 
-# The extracted-pages table (WARC→columnar prep; one-time Arrow UDF pass).
-PAGES_EXT_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("text", StringType(), True),
-        StructField("outlinks", ArrayType(StringType()), True),
-        StructField("html_absent", BooleanType(), False),
-    ]
-)
-
 # URL-seen checkpoint (reference analog: ProgressCache JSON,
 # builder/progress.py:37-154).
 SEEN_SCHEMA = StructType(

@@ -6,6 +6,7 @@ recovery at every commit boundary."""
 from __future__ import annotations
 
 import collections
+import random
 import threading
 
 import pytest
@@ -19,6 +20,7 @@ from pixcrawler_spark.fixtures import (
     seed_urls,
     write_fixtures,
 )
+from pixcrawler_spark.functions.text import extract_outlinks_py, extract_text_py
 from pixcrawler_spark.plans.crawl import CrawlConfig, CrawlEngine
 from pixcrawler_spark.sources.tables import TableStore
 from tests.oracle import CrawlOracle
@@ -155,19 +157,122 @@ def test_crawl_ordering_matches_oracle(engine_run, oracle):
 
 
 def test_extracted_text_byte_identical(engine_run, spark, fixture_dir):
-    """input_hint invariant: extracted text == pages.text per url."""
+    """input_hint invariant over the whole pages_ext table: for every
+    fixture url, text == pages.text, outlinks == the outlink oracle and
+    html_absent == html IS NULL; and fetched results carry that text."""
     eng, _ = engine_run
+    pages = {
+        r["url"]: r
+        for r in spark.read.parquet(f"{fixture_dir}/pages.parquet").collect()
+    }
+    ext = {r["url"]: r for r in eng.ensure_pages_ext().collect()}
+    assert ext.keys() == pages.keys()
+    for url, p in pages.items():
+        e = ext[url]
+        assert e["text"] == p["text"], url
+        assert e["outlinks"] == extract_outlinks_py(p["html"]), url
+        assert e["html_absent"] == (p["html"] is None), url
+    assert any(e["outlinks"] for e in ext.values())
+    assert any(e["html_absent"] for e in ext.values())
+
     res = eng.results_with_text().where(F.col("fetch_decision") == "fetched")
-    pages = spark.read.parquet(f"{fixture_dir}/pages.parquet").select(
-        "url", F.col("text").alias("expected_text")
+    fetched = res.select("url", "text").collect()
+    assert fetched
+    assert all(r["text"] == pages[r["url"]]["text"] for r in fetched)
+
+
+# hand-written bodies: each kind of invalid UTF-8 (most decode
+# differently under a plain cast than under errors="replace") and the
+# edge cases of the extraction regexes
+INVALID_UTF8_BODIES = [
+    None,
+    b"",
+    b"<p>\xed\xa0\x80</p>",  # encoded surrogate: 3 replacements
+    b'<a href="/\xed\xbf\xbf">x</a>',
+    b"<p>\xe2\x82</p><title>\xf0\x9f\x98</title>",  # truncated
+    b"<p>a\xe2</p><p>\xf0\x9f</p>",
+    b"<p>\x80\xbf\x80</p>",  # lone continuation bytes
+    b"<p>\xc0\xaf\xe0\x80\xaf\xc1\xbf</p>",  # overlong
+    b"<p>\xf4\x90\x80\x80\xf5\x80\x80\x80</p>",  # above U+10FFFF
+    b'<title>\xff</title><a href="x\xffy">\xfe</a>',
+    b"<p>never closed \xe2\x82\xac",
+    b"<title>a</title><p>b</p><title>c\xc3</title>",
+    b"<p>line1\n\xe9line2</p>",
+    b"<p>caf\xc3\xa9 \xf0\x9f\x98\x80</p>",
+]
+# bytes that start, continue or break multi-byte sequences
+INVALID_UTF8_ALPHABET = bytes.fromhex("80bfc0c2e0e2edeff0f4f5ff4182a09f")
+
+
+def _random_invalid_bodies(n: int, seed: int = 5) -> list[bytes]:
+    rng = random.Random(seed)
+
+    def junk() -> bytes:
+        return bytes(rng.choices(INVALID_UTF8_ALPHABET, k=rng.randint(0, 6)))
+
+    return [
+        b"<title>" + junk() + b"</title>" + junk() + b"<p>" + junk()
+        + b"</p>" + b'<a href="' + junk() + b'">' + junk() + b"<p>"
+        + junk() + (b"</p>" if rng.random() < 0.8 else b"")
+        for _ in range(n)
+    ]
+
+
+def test_extraction_matches_oracle_on_invalid_utf8(spark, fixture_dir, tmp_path):
+    """extracted_pages equals extract_text_py/extract_outlinks_py row
+    by row on invalid UTF-8 bodies, in one collect. The fixture is
+    ASCII, so only this test exercises the replacement of invalid
+    sequences."""
+    bodies = INVALID_UTF8_BODIES + _random_invalid_bodies(2500)
+    pages = spark.createDataFrame(
+        [(f"http://u/{i}", None, b) for i, b in enumerate(bodies)],
+        "url string, warc_ts timestamp_ntz, html binary",
     )
-    diff = (
-        res.join(pages, "url")
-        .where(~F.col("text").eqNullSafe(F.col("expected_text")))
-        .count()
+    eng = CrawlEngine(
+        spark, pages, f"{fixture_dir}/robots.parquet",
+        TableStore(spark, str(tmp_path / "store")),
+        CrawlConfig(seeds=["http://u/0"], n_buckets=4),
     )
-    assert diff == 0
-    assert res.count() > 0
+    got = {r["url"]: r for r in eng.extracted_pages().collect()}
+    assert len(got) == len(bodies)
+    for i, b in enumerate(bodies):
+        r = got[f"http://u/{i}"]
+        assert r["text"] == extract_text_py(b), b
+        assert r["outlinks"] == extract_outlinks_py(b), b
+        assert r["html_absent"] == (b is None), b
+
+
+def test_pages_ext_write_plan(spark, fixture_dir, tmp_path, seeds):
+    """The executed plan of the pages_ext write holds no Python
+    evaluation node and exactly one Exchange: extraction runs after
+    the url hash exchange that the bucketed write needs anyway."""
+    eng = _mk_engine(spark, fixture_dir, tmp_path, seeds, n_buckets=4)
+    tag = f"pages_ext_write_plan:{tmp_path}"
+    spark.sparkContext.setJobDescription(tag)
+    try:
+        eng.ensure_pages_ext()
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    status = spark._jsparkSession.sharedState().statusStore()
+    execs = status.executionsList()
+    plans = []
+    for e in (execs.apply(i) for i in range(execs.size())):
+        if e.description() == tag:
+            nodes = status.planGraph(e.executionId()).allNodes()
+            plans.append([nodes.apply(i).name() for i in range(nodes.size())])
+    writes = [
+        names for names in plans
+        if "Execute InsertIntoHadoopFsRelationCommand" in names
+    ]
+    assert len(writes) == 1, plans
+    names = writes[0]
+    python_nodes = {"MapInPandas", "ArrowEvalPython", "BatchEvalPython"}
+    assert not python_nodes.intersection(names), names
+    assert names.count("Exchange") == 1, names
+    # the graph lists a linear plan top-down: extraction (the Project)
+    # sits above the exchange, on the reducers
+    projects = [i for i, n in enumerate(names) if n == "Project"]
+    assert projects and max(projects) < names.index("Exchange"), names
 
 
 def test_politeness_never_exceeds_capacity(engine_run, spark, fixture_dir):
