@@ -78,11 +78,6 @@ def main() -> None:
     ap.add_argument("--max-depth", type=int, default=1,
                     help="1 = rounds include outlink discovery + seen-filtered "
                     "frontier merge (the full maintenance path)")
-    ap.add_argument("--use-bloom", action="store_true")
-    ap.add_argument("--warm-bloom", action="store_true",
-                    help="prewarm the shard blobs untimed before each "
-                    "pass (steady-state shape: ensure() is a metadata "
-                    "hit; passes measure probe + delta update only)")
     ap.add_argument("--no-aqe", action="store_true")
     args = ap.parse_args()
 
@@ -123,7 +118,6 @@ def main() -> None:
         seeds=["placeholder"],  # frontier seeded directly below
         max_depth=args.max_depth,
         max_rounds=1,
-        use_bloom=args.use_bloom,
         n_buckets=N_BUCKETS,
     )
     eng = CrawlEngine(spark, pages, robots, store, cfg, static_store=static_store)
@@ -195,32 +189,14 @@ def main() -> None:
         _copy_state_table("frontier")
         _copy_state_table("seen")
 
-    def prewarm_bloom() -> None:
-        # steady-state shape: in a real crawl the shard blobs persist
-        # across rounds and each round's ensure() is a metadata hit +
-        # delta update. The bench's per-pass state reset leaves a blob
-        # covering round 1, which ensure(covers_round=0) treats as
-        # stale — so WITHOUT this prewarm every timed pass includes a
-        # full O(seen) bitmap rebuild (the cold-recovery path). With
-        # --warm-bloom the rebuild happens here, untimed, and passes
-        # measure the warm path: probe + delta shard update only.
-        if args.use_bloom and args.warm_bloom:
-            from pixcrawler_spark.operators.seen import IncrementalBloom
-
-            IncrementalBloom(store).ensure(
-                seen_df.select("url"), covers_round=0
-            )
-
-    # untimed warm-up: python-worker spawn + size-specific AQE codegen
+    # untimed warm-up: JIT + size-specific AQE codegen
     reset_state()
-    prewarm_bloom()
     eng.run_round(1)
 
     passes = []
     last_summary = None
     for _ in range(args.passes):
         reset_state()
-        prewarm_bloom()
         t0 = time.monotonic()
         last_summary = eng.run_round(1)
         passes.append(time.monotonic() - t0)

@@ -89,10 +89,6 @@ SCALE NOTES (10^10-URL frontier):
   (Without this cut the window was measured serializing 18% of the
   corpus into one task.) Capacity is always bounded by
   ``max_per_round``, so the literal bound always exists.
-- The discovery seen-probe can be bloom-accelerated (operators/
-  seen.py) when ``use_bloom`` — an INCREMENTAL persistent bitmap
-  (delta-only updates per round, staleness-safe rebuild); false drops
-  impossible by construction (probe → exact confirm join).
 - Each round commits round_log/results/seen/frontier_added/metrics
   (TableStore → Iceberg in production). COMMIT ORDER makes a crashed
   round idempotent: round_log (stamped with its round) → results/seen
@@ -119,7 +115,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pixcrawler_spark.operators import politeness as pol
-from pixcrawler_spark.operators.seen import anti_join_seen
 from pixcrawler_spark.schemas import FRONTIER_SCHEMA, SEEN_SCHEMA
 from pixcrawler_spark.session import keep_observed_branches
 from pixcrawler_spark.sources.tables import TableStore
@@ -149,7 +144,6 @@ class CrawlConfig:
     max_rounds: int = 5
     round_len_s: float = 10.0
     engines: tuple[str, ...] = ("google", "bing", "baidu")
-    use_bloom: bool = False
     # Retry ladder (reference: Retry.retry_download + ALTERNATING
     # engine strategy, builder/_generator.py:237-341): a fetch_failed
     # url with retry_count < max_retries is re-enqueued for the next
@@ -672,10 +666,7 @@ class CrawlEngine:
           no scan) and removed by a filter-rewrite — the parquet
           stand-in for Iceberg's ``DELETE WHERE completed_round >= N``
           (metadata-level there; a one-off table rewrite here, paid only
-          on actual crash recovery);
-        - a bloom blob advanced past N-1 is harmless: extra bits only
-          send more rows to the exact confirm join (probe is a
-          prefilter, never an authority).
+          on actual crash recovery).
 
         Round-N tombstones need no rollback: they land only with the
         delta flip, which is the commit point itself.
@@ -783,19 +774,6 @@ class CrawlEngine:
         seen_prev = self.store.read("seen", SEEN_SCHEMA).where(
             F.col("completed_round") < round_no
         )
-        # incremental seen-bloom: load (or rebuild if stale) the bitmap
-        # covering rounds <= round_no-1 BEFORE the concurrent jobs —
-        # job_seen advances the stored blob to round_no in parallel
-        bloom_prebuilt = None
-        if cfg.use_bloom:
-            from pixcrawler_spark.operators.seen import IncrementalBloom
-
-            self._bloom = getattr(self, "_bloom", None) or IncrementalBloom(
-                self.store
-            )
-            bloom_prebuilt = self._bloom.ensure(
-                seen_prev.select("url"), covers_round=round_no - 1
-            )
 
         def job_results() -> None:
             self.store.append(
@@ -815,12 +793,6 @@ class CrawlEngine:
                 ),
                 bucket=self._bucket,
             )
-            if cfg.use_bloom:
-                # delta-only bitmap update (the full-rebuild path is
-                # only the stale-recovery fallback in ensure())
-                self._bloom.update(
-                    recorded.select("url"), covers_round=round_no
-                )
 
         # discovery telemetry rides on the delta write: the raw
         # (pre-dedup) rows are counted as they enter the dedup window,
@@ -834,11 +806,17 @@ class CrawlEngine:
             .withColumn("_rn", F.row_number().over(wdup))
         )
         # the round's deduped, seen-filtered, not-just-decided
-        # discoveries
-        delta_new = anti_join_seen(
-            delta_ranked.where(F.col("_rn") == 1).drop("_rn"),
-            seen_prev, use_bloom=cfg.use_bloom, prebuilt=bloom_prebuilt,
-        ).join(recorded.select("url").hint("merge"), "url", "left_anti")
+        # discoveries. Merge hint on seen: it is never broadcastable
+        # at frontier scale (the static planner would happily build a
+        # 10^10-row driver hash relation at the default threshold);
+        # with seen stored bucketed by url the SMJ scans it
+        # exchange-free and only the candidate delta shuffles.
+        delta_new = (
+            delta_ranked.where(F.col("_rn") == 1)
+            .drop("_rn")
+            .join(seen_prev.select("url").hint("merge"), "url", "left_anti")
+            .join(recorded.select("url").hint("merge"), "url", "left_anti")
+        )
 
         # input logical-frontier size: chained arithmetically through
         # the commit metadata (n_next = n - decided + new); fresh and
@@ -1044,18 +1022,15 @@ class CrawlEngine:
     MAX_RECOVERY_ATTEMPTS = 3
 
     def control(self) -> dict:
-        blob = self.store.get_blob(self.CONTROL_BLOB)
-        if blob is None:
-            return {
-                "status": "running",
-                "recovery_attempts": 0,
-                "max_recovery_attempts": self.MAX_RECOVERY_ATTEMPTS,
-            }
-        return blob[1]
+        return self.store.get_blob(self.CONTROL_BLOB) or {
+            "status": "running",
+            "recovery_attempts": 0,
+            "max_recovery_attempts": self.MAX_RECOVERY_ATTEMPTS,
+        }
 
     def _set_control(self, **updates) -> dict:
         c = dict(self.control(), **updates)
-        self.store.put_blob(self.CONTROL_BLOB, b"", c)
+        self.store.put_blob(self.CONTROL_BLOB, c)
         return c
 
     def pause(self) -> dict:

@@ -91,10 +91,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
 def _schema_ddl(schema: StructType) -> str:
     return ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
@@ -490,40 +486,24 @@ class TableStore:
         self._write_manifest(table, manifest)
         return snap
 
-    def put_blob(self, name: str, data: bytes, meta: dict) -> None:
-        """Atomically store an opaque sidecar blob + JSON metadata
-        (used for the incremental seen-set bloom filter). Blob and meta
-        commit together via one atomic rename of the meta file."""
+    def put_blob(self, name: str, meta: dict) -> None:
+        """Atomically store a small JSON record (the crawl control
+        state): a temp-file write, then one atomic rename over
+        ``<name>.json``, so a reader sees the old record or the new one,
+        never a torn write."""
         d = os.path.join(self.root, "_blobs")
         os.makedirs(d, exist_ok=True)
-        gen = uuid.uuid4().hex[:8]
-        bin_path = os.path.join(d, f"{name}.{gen}.bin")
-        with open(bin_path, "wb") as f:
-            f.write(data)
-        meta = dict(meta, _bin=os.path.basename(bin_path))
-        tmp = os.path.join(d, f"{name}.json.tmp.{gen}")
+        tmp = os.path.join(d, f"{name}.json.tmp.{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
             json.dump(meta, f)
-        old = self.get_blob(name)
         os.replace(tmp, os.path.join(d, f"{name}.json"))
-        if old is not None:
-            try:
-                os.remove(os.path.join(d, old[1]["_bin"]))
-            except OSError:
-                pass
 
-    def get_blob(self, name: str) -> tuple[bytes, dict] | None:
-        d = os.path.join(self.root, "_blobs")
-        meta_path = os.path.join(d, f"{name}.json")
+    def get_blob(self, name: str) -> dict | None:
+        meta_path = os.path.join(self.root, "_blobs", f"{name}.json")
         if not os.path.exists(meta_path):
             return None
         with open(meta_path) as f:
-            meta = json.load(f)
-        bin_path = os.path.join(d, meta["_bin"])
-        if not os.path.exists(bin_path):
-            return None
-        with open(bin_path, "rb") as f:
-            return f.read(), meta
+            return json.load(f)
 
     def count(self, table: str) -> int:
         """Exact row count from parquet footers (driver-side metadata

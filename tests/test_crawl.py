@@ -1,7 +1,7 @@
 """Crawl-engine correctness vs the pandas oracle: fetch decisions,
 crawl ordering, final URL-seen set, byte-identical extracted text,
-resume-from-checkpoint equivalence, bloom-path equivalence, and crash
-recovery at every commit boundary."""
+resume-from-checkpoint equivalence, crash recovery at every commit
+boundary, and a round plan free of Python evaluation."""
 
 from __future__ import annotations
 
@@ -242,6 +242,14 @@ def test_extraction_matches_oracle_on_invalid_utf8(spark, fixture_dir, tmp_path)
         assert r["html_absent"] == (b is None), b
 
 
+PYTHON_NODES = {"MapInPandas", "ArrowEvalPython", "BatchEvalPython"}
+
+
+def _plan_node_names(status, execution_id) -> list[str]:
+    nodes = status.planGraph(execution_id).allNodes()
+    return [nodes.apply(i).name() for i in range(nodes.size())]
+
+
 def test_pages_ext_write_plan(spark, fixture_dir, tmp_path, seeds):
     """The executed plan of the pages_ext write holds no Python
     evaluation node and exactly one Exchange: extraction runs after
@@ -255,24 +263,50 @@ def test_pages_ext_write_plan(spark, fixture_dir, tmp_path, seeds):
         spark.sparkContext.setJobDescription(None)
     status = spark._jsparkSession.sharedState().statusStore()
     execs = status.executionsList()
-    plans = []
-    for e in (execs.apply(i) for i in range(execs.size())):
-        if e.description() == tag:
-            nodes = status.planGraph(e.executionId()).allNodes()
-            plans.append([nodes.apply(i).name() for i in range(nodes.size())])
+    plans = [
+        _plan_node_names(status, e.executionId())
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if e.description() == tag
+    ]
     writes = [
         names for names in plans
         if "Execute InsertIntoHadoopFsRelationCommand" in names
     ]
     assert len(writes) == 1, plans
     names = writes[0]
-    python_nodes = {"MapInPandas", "ArrowEvalPython", "BatchEvalPython"}
-    assert not python_nodes.intersection(names), names
+    assert not PYTHON_NODES.intersection(names), names
     assert names.count("Exchange") == 1, names
     # the graph lists a linear plan top-down: extraction (the Project)
     # sits above the exchange, on the reducers
     projects = [i for i, n in enumerate(names) if n == "Project"]
     assert projects and max(projects) < names.index("Exchange"), names
+
+
+def test_round_runs_no_python(spark, fixture_dir, tmp_path, seeds):
+    """No plan that a round runs evaluates Python: not the decide
+    write, not the maintain jobs, not the discovery seen-probe. Round 2
+    of a max_depth=2 crawl expands depth-1 pages into new urls, so the
+    whole discovery path runs. The maintain jobs run in pool threads,
+    which do not inherit a job description, so the round's executions
+    are selected by id range instead."""
+    eng = _mk_engine(spark, fixture_dir, tmp_path, seeds, max_rounds=1)
+    eng.run()
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids() -> list[int]:
+        execs = status.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.size())]
+
+    before = max(execution_ids(), default=-1)
+    summary = eng.run_round(2)
+    assert summary["n_discovered_new"] > 0, summary
+    # the status store fills from the async listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = [i for i in execution_ids() if i > before]
+    assert ids
+    for i in ids:
+        names = _plan_node_names(status, i)
+        assert not PYTHON_NODES.intersection(names), names
 
 
 def test_politeness_never_exceeds_capacity(engine_run, spark, fixture_dir):
@@ -316,17 +350,6 @@ def test_resume_equivalence(spark, fixture_dir, tmp_path_factory, seeds, engine_
     base, _ = engine_run
     assert _seen_set(eng3) == _seen_set(base)
     assert _decisions(eng3) == _decisions(base)
-
-
-def test_bloom_path_equivalent(spark, fixture_dir, tmp_path_factory, seeds, engine_run):
-    eng_b = _mk_engine(
-        spark, fixture_dir, tmp_path_factory.mktemp("store_bloom"), seeds,
-        use_bloom=True,
-    )
-    eng_b.run()
-    base, _ = engine_run
-    assert _seen_set(eng_b) == _seen_set(base)
-    assert _decisions(eng_b) == _decisions(base)
 
 
 def test_crash_before_frontier_commit_recovers(

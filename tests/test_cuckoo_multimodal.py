@@ -1,5 +1,5 @@
-"""Cuckoo filter (insert/lookup/delete, in-round dedup) and multimodal
-decode plumbing (stubbed decode, validity gate, frame sampling)."""
+"""Multimodal decode plumbing (stubbed decode, validity gate, frame
+sampling)."""
 
 from __future__ import annotations
 
@@ -7,47 +7,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pixcrawler_spark.operators.cuckoo import CuckooFilter, partition_dedup
 from pixcrawler_spark.operators.multimodal import (
     decode_media,
     frame_sample_plan,
     validity_filter,
 )
-
-
-# -- cuckoo filter -------------------------------------------------------------
-def test_cuckoo_insert_contains_delete():
-    cf = CuckooFilter(capacity=10_000, seed=1)
-    rng = np.random.default_rng(0)
-    keys = rng.integers(1, 2**63, size=5000).astype(np.uint64)
-    fresh = cf.insert_hashes(keys)
-    assert fresh.all()
-    assert cf.contains_hashes(keys).all()
-    # re-insert → all detected as duplicates
-    again = cf.insert_hashes(keys[:100])
-    assert not again.any()
-    # delete restores insertability
-    assert cf.delete_hashes(keys[:100]).all()
-    assert cf.insert_hashes(keys[:100]).all()
-
-
-def test_cuckoo_false_positive_rate_bounded():
-    cf = CuckooFilter(capacity=20_000, seed=2)
-    rng = np.random.default_rng(3)
-    present = rng.integers(1, 2**63, size=10_000).astype(np.uint64)
-    cf.insert_hashes(present)
-    absent = rng.integers(1, 2**63, size=10_000).astype(np.uint64)
-    fp = cf.contains_hashes(absent).mean()
-    assert fp < 0.01  # 16-bit fingerprints → ~2^-13 expected
-
-
-def test_partition_dedup_drops_repeats(spark):
-    df = spark.createDataFrame(
-        [(f"u{i % 50}", i) for i in range(500)], "url string, v int"
-    ).coalesce(1)
-    out = partition_dedup(df, "url")
-    assert out.count() == 50
-    assert out.select("url").distinct().count() == 50
 
 
 # -- multimodal ----------------------------------------------------------------

@@ -105,67 +105,6 @@ def test_rollback_unsupported_for_bucketed(spark, tmp_path):
         store.rollback_to("seen", "whatever")
 
 
-def test_incremental_bloom_update_and_staleness(spark, tmp_path):
-    """Sharded IncrementalBloom: delta updates advance the covered
-    round and rewrite only touched shards; a stale master (wrong
-    round) triggers a rebuild; probes never produce false negatives
-    (sharded path ≡ exact anti-join)."""
-    import os
-
-    from pixcrawler_spark.operators.seen import (
-        IncrementalBloom,
-        anti_join_seen,
-    )
-
-    store = TableStore(spark, str(tmp_path / "b1"))
-    bloom = IncrementalBloom(store, n_shards=4)
-    seen_r1 = _urls(spark, 0, 500, 1).select("url")
-    h1 = bloom.ensure(seen_r1, covers_round=1)
-    assert store.get_blob(IncrementalBloom.BLOB)[1]["round"] == 1
-    assert h1.n_shards == 4 and len(h1.shard_paths) == 4
-    assert all(os.path.exists(p) for p in h1.shard_paths.values())
-
-    # round 2 delta
-    delta_r2 = _urls(spark, 500, 700, 2).select("url")
-    bloom.update(delta_r2, covers_round=2)
-    meta = store.get_blob(IncrementalBloom.BLOB)[1]
-    assert meta["round"] == 2
-
-    # the updated shards must have no false negatives over r1 ∪ r2:
-    # sharded-bloom anti-join ≡ exact anti-join (path equivalence)
-    seen_all = seen_r1.union(delta_r2)
-    h2 = bloom.ensure(seen_all, covers_round=2)  # cache hit, no rebuild
-    assert h2.m_shard == h1.m_shard
-    cands = _urls(spark, 0, 1000, 0).select("url")
-    got = {
-        r["url"]
-        for r in anti_join_seen(
-            cands, seen_all, use_bloom=True, prebuilt=h2
-        ).collect()
-    }
-    want = {r["url"] for r in cands.join(seen_all, "url", "left_anti").collect()}
-    assert got == want
-
-    # staleness: asking for a different covered round rebuilds
-    bloom.ensure(seen_r1, covers_round=1)
-    assert store.get_blob(IncrementalBloom.BLOB)[1]["round"] == 1
-
-
-def test_sharded_bloom_update_touches_only_delta_shards(spark, tmp_path):
-    from pixcrawler_spark.operators.seen import IncrementalBloom
-
-    store = TableStore(spark, str(tmp_path / "b2"))
-    bloom = IncrementalBloom(store, n_shards=8)
-    bloom.ensure(_urls(spark, 0, 2000, 1).select("url"), covers_round=1)
-    before = dict(store.get_blob(IncrementalBloom.BLOB)[1]["shards"])
-    # a 3-url delta hashes into at most 3 shards → >= 5 paths unchanged
-    bloom.update(_urls(spark, 9000, 9003, 2).select("url"), covers_round=2)
-    after = dict(store.get_blob(IncrementalBloom.BLOB)[1]["shards"])
-    unchanged = sum(before[j] == after[j] for j in before)
-    assert unchanged >= 5
-    assert after != before
-
-
 def test_read_at_time_travel_nondestructive(spark, tmp_path):
     import pytest
 
