@@ -348,9 +348,10 @@ WindowGroupLimit: map-side partial top-K, so the hottest Zipf domain
 never serializes a task) → fetch join against the url-bucketed pages
 table → round_log commit → concurrent maintenance jobs (results
 append, bucketed seen append, frontier remainder-merge with deduped
-seen-filtered discoveries, per-partition metrics). Politeness is the
-fixture's real budget (10/domain/round + crawl delays), so hot domains
-stall — at the primary scale: {summ["n_decided"]:,} decided
+seen-filtered discoveries; the counts ride on these writes) → one
+metrics row. Politeness is the fixture's real budget (10/domain/round
+and crawl delays), so hot domains stall — at the primary scale:
+{summ["n_decided"]:,} decided
 ({summ["n_fetched"]:,} fetched, {summ["n_robots_denied"]:,}
 robots-denied) and {summ["n_stalled"]:,} politeness-deferred per
 round. Headline THROUGHPUT is decided URLs / round wall time —

@@ -63,11 +63,13 @@ A round is then:
    appends = scans of the committed log; the delta is rewritten as
    previous tombstones ∪ this round's decided rows as tombstones ∪
    merge_best(adds ANTI log, deduped seen-filtered politeness-stamped
-   discoveries + retry re-enqueues); per-partition metrics. The two
-   discovery counts (raw, and new = not already waiting in the
-   remainder) are Observations on the delta write itself, so they cost
-   no job of their own. NO full-frontier write, NO full-frontier
-   shuffle — only scans (which parallelize) and delta-sized writes.
+   discoveries + retry re-enqueues). NO full-frontier write, NO
+   full-frontier shuffle — only scans (which parallelize) and
+   delta-sized writes. No job only counts: the decision counts are an
+   Observation on the round_log write, the two discovery counts (raw,
+   and new = not already waiting in the remainder) Observations on the
+   delta write, and the frontier size chains through commit metadata.
+   The round's one metrics row is a driver-side append built from them.
 3. COMPACT (when tombstones exceed ``compact_ratio`` of the base, or
    every ``compact_every`` rounds): ONE base write of the
    materialized logical view under a new ``base_id``. The same commit
@@ -166,17 +168,6 @@ class CrawlConfig:
     # periodic override (0 = off); ratio 0 disables the ratio trigger.
     compact_ratio: float = 0.25
     compact_every: int = 0
-    # Resolve redirect aliases to their chain-terminal url BEFORE any
-    # url enters the frontier (seeds and discovered outlinks), so the
-    # seen set and politeness budgets are charged to the page actually
-    # fetched and an alias is never crawled separately from its
-    # target. Requires a redirects DataFrame (src, dst) passed to the
-    # engine; cycle members (redirect loops — crawler traps) are
-    # dropped at the door. Pointer doubling: log2(chain) equi-joins
-    # per round over the enqueue-time DELTA only
-    # (operators/redirects.py). OFF by default: the golden/oracle
-    # surface is byte-identical with the flag off.
-    resolve_redirects: bool = False
     # Resolve RELATIVE outlinks (../x, ./y, /abs, //host/p, ?q=2)
     # against the linking page's url before they enter the frontier —
     # RFC 3986 §5 as a zero-shuffle expression tree
@@ -243,12 +234,9 @@ class CrawlEngine:
             if isinstance(robots_path, DataFrame)
             else spark.read.parquet(robots_path)
         )
+        # (src, dst) redirect map; given one, _resolve_aliases is on
         self.redirects = redirects
         self._alias_map_df: DataFrame | None = None
-        if config.resolve_redirects and redirects is None:
-            raise ValueError(
-                "resolve_redirects=True requires a redirects DataFrame"
-            )
 
     def _alias_map(self) -> DataFrame:
         """Resolve the (static) redirect map ONCE per crawl: pointer
@@ -275,12 +263,14 @@ class CrawlEngine:
 
     def _resolve_aliases(self, rows: DataFrame) -> DataFrame:
         """Map every url in ``rows`` to its redirect-chain terminal,
-        dropping cycle members (crawler traps). No-op unless
-        cfg.resolve_redirects. Runs over the enqueue-time delta only —
-        never the accumulated frontier — and before domain stamping,
-        because the TERMINAL's host is the one whose politeness budget
-        the fetch spends."""
-        if not self.config.resolve_redirects:
+        dropping cycle members (redirect loops — crawler traps), so the
+        seen set and politeness budgets are charged to the page actually
+        fetched and an alias is never crawled apart from its target.
+        No-op when the engine has no redirects frame. Runs over the
+        enqueue-time delta only — never the accumulated frontier — and
+        before domain stamping, because the TERMINAL's host is the one
+        whose politeness budget the fetch spends."""
+        if self.redirects is None:
             return rows
         m = self._alias_map()
         other = [c for c in rows.columns if c != "url"]
@@ -297,8 +287,8 @@ class CrawlEngine:
         (used by run() for config seeds and by the bench harness to seed
         the whole corpus without a driver-side list). Drops duplicate
         urls (frontier invariant; redirect aliases collapse to their
-        terminal first when cfg.resolve_redirects, so two seed aliases
-        of one page yield one frontier row)."""
+        terminal first when the engine has a redirects frame, so two
+        seed aliases of one page yield one frontier row)."""
         cfg = self.config
         depth = F.lit(0)
         engine = _engine_expr(depth, cfg.engines)
@@ -587,8 +577,8 @@ class CrawlEngine:
                 next_depth.alias("depth"), F.explode("outlinks").alias("url")
             )
         # alias collapse BEFORE the seen join/dedup: an outlink to a
-        # redirect alias is a discovery of its terminal (no-op unless
-        # cfg.resolve_redirects)
+        # redirect alias is a discovery of its terminal (no-op without
+        # a redirects frame)
         discovered = self._resolve_aliases(discovered)
         engine = _engine_expr(F.col("depth"), cfg.engines)
         # politeness stamp happens later, on the deduped seen-filtered
@@ -706,35 +696,23 @@ class CrawlEngine:
                 f"last round committed to the delta (round_log meta says "
                 f"{lmeta.get('round')})"
             )
-        return self._commit_metrics(
-            round_no, meta["per_part"], meta["n_frontier"],
-            meta["n_disc_raw"], meta["n_disc_new"], wall=0.0,
-        )
+        return self._commit_metrics(round_no, meta, wall=0.0)
 
-    @staticmethod
-    def _metrics_agg(log: DataFrame) -> list:
-        return (
-            log.groupBy("partition_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_processed"),
-                F.sum(
-                    F.when(
-                        F.col("fetch_decision") == "robots_denied", 1
-                    ).otherwise(0)
-                ).alias("n_robots_denied"),
-                F.sum(
-                    F.when(
-                        (F.col("fetch_decision") == "fetched")
-                        & (~F.col("will_retry")),
-                        1,
-                    ).otherwise(0)
-                ).alias("n_fetched"),
-                F.sum(F.when(F.col("will_retry"), 1).otherwise(0)).alias(
-                    "n_retrying"
-                ),
+    def _frontier_counters(self) -> tuple[int, int, int]:
+        """(logical frontier size, base size, tombstones) of the
+        committed frontier state, from metadata alone (no Spark job):
+        chained through the live delta's commit meta (n_next = n -
+        decided + new), else — fresh, compacted or rolled back — the
+        base alone is the logical frontier: its parquet footer count is
+        exact and it carries zero tombstones."""
+        meta = self._live_delta_meta()
+        if meta is not None:
+            return (
+                int(meta["n_frontier_next"]), int(meta["n_base"]),
+                int(meta["n_tombstones"]),
             )
-            .collect()
-        )
+        n = self.store.count("frontier")
+        return n, n, 0
 
     def run_round(self, round_no: int) -> dict:
         cfg = self.config
@@ -746,22 +724,36 @@ class CrawlEngine:
             return recovered
 
         # 1. DECIDE — the one heavy job of the round, over the
-        # merge-on-read logical frontier.
+        # merge-on-read logical frontier. The round's decision counts
+        # are an Observation on this write: no job of their own.
+        obs_dec = Observation()
+        decision = F.col("fetch_decision")
         self.store.overwrite(
             "round_log",
-            self.decide_plan(round_no),
+            self.decide_plan(round_no).observe(
+                obs_dec,
+                F.count(F.lit(1)).alias("n_decided"),
+                F.count(F.when(decision == "robots_denied", 1)).alias(
+                    "n_robots_denied"
+                ),
+                F.count(
+                    F.when((decision == "fetched") & ~F.col("will_retry"), 1)
+                ).alias("n_fetched"),
+                F.count(F.when(F.col("will_retry"), 1)).alias("n_retrying"),
+            ),
             meta={"round": round_no},
         )
+        counts = dict(obs_dec.get)
         log = self.store.read("round_log")
 
-        # 2-3. MAINTAIN — independent scans of the committed log,
-        # submitted as CONCURRENT Spark jobs (threads share the
-        # SparkSession; the scheduler interleaves their tasks). All
-        # concurrent reads are guarded against the concurrent writers
-        # by round predicates (seen: completed_round < N) or by
-        # overwrite generations (the frontier tables: the new delta is
-        # staged, not committed), so evaluation order cannot change
-        # results.
+        # 2-3. MAINTAIN — three independent writes from the committed
+        # log (results, seen, the staged delta), submitted as CONCURRENT
+        # Spark jobs (threads share the SparkSession; the scheduler
+        # interleaves their tasks). All concurrent reads are guarded
+        # against the concurrent writers by round predicates (seen:
+        # completed_round < N) or by overwrite generations (the frontier
+        # tables: the new delta is staged, not committed), so evaluation
+        # order cannot change results.
         recorded = log.where(~F.col("will_retry"))
         # resolve reads before any concurrent write
         base = self.store.read("frontier", FRONTIER_SCHEMA)
@@ -818,20 +810,7 @@ class CrawlEngine:
             .join(recorded.select("url").hint("merge"), "url", "left_anti")
         )
 
-        # input logical-frontier size: chained arithmetically through
-        # the commit metadata (n_next = n - decided + new); fresh and
-        # just-compacted states are base-only, where the parquet
-        # footer count is exact and free
-        if prev_meta is not None:
-            n_frontier = int(prev_meta["n_frontier_next"])
-            n_base = int(prev_meta["n_base"])
-            n_tomb_prev = int(prev_meta["n_tombstones"])
-        else:
-            # fresh, compacted or rolled back: the base alone IS the
-            # logical frontier and carries zero tombstones
-            n_frontier = self.store.count("frontier")
-            n_base = n_frontier
-            n_tomb_prev = 0
+        n_frontier, n_base, n_tomb_prev = self._frontier_counters()
 
         def job_delta_stage() -> dict:
             # the round's one frontier write: previous tombstones ∪
@@ -884,43 +863,40 @@ class CrawlEngine:
 
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
+        with ThreadPoolExecutor(max_workers=3) as pool:
             f_results = pool.submit(job_results)
             f_seen = pool.submit(job_seen)
             f_delta = pool.submit(job_delta_stage)
-            f_metrics = pool.submit(self._metrics_agg, log)
             delta_token = f_delta.result()
             f_results.result()
             f_seen.result()
-            per_part = f_metrics.result()
         # the delta write has returned, so both observations are filled
-        n_disc_raw = int(obs_raw.get["n"])
-        n_disc_new = int(obs_new.get["n"])
-        n_decided_tmp = sum(r["n_processed"] for r in per_part)
+        counts.update(
+            n_frontier=n_frontier,
+            n_disc_raw=int(obs_raw.get["n"]),
+            n_disc_new=int(obs_new.get["n"]),
+        )
         # compaction-policy counter (chained, no Spark job): every
         # decided url added one tombstone this round
-        n_tombstones = n_tomb_prev + n_decided_tmp
+        n_tombstones = n_tomb_prev + counts["n_decided"]
         # commit point: everything the new frontier state supersedes is
-        # durable — flip the delta (one atomic rename). Stamp the input
-        # size and the counter chain for the next round, and the
-        # round's counts for metrics finalization after a crash.
+        # durable — flip the delta (one atomic rename). Stamp the counter
+        # chain for the next round, and the round's counts for metrics
+        # finalization after a crash.
         delta_token["manifest"]["meta"].update(
-            n_frontier=n_frontier,
-            n_frontier_next=n_frontier - n_decided_tmp + n_disc_new,
+            counts,
+            n_frontier_next=(
+                n_frontier - counts["n_decided"] + counts["n_disc_new"]
+            ),
             n_base=n_base,
             n_tombstones=n_tombstones,
-            per_part=[r.asDict() for r in per_part],
-            n_disc_raw=n_disc_raw,
-            n_disc_new=n_disc_new,
         )
         self.store.commit_staged(delta_token)
 
         # 4. per-round summary + metrics table commit
         wall = time.monotonic() - t0
         tombstone_ratio = n_tombstones / n_base if n_base > 0 else 0.0
-        summary = self._commit_metrics(
-            round_no, per_part, n_frontier, n_disc_raw, n_disc_new, wall
-        )
+        summary = self._commit_metrics(round_no, counts, wall)
         summary["tombstone_ratio"] = round(tombstone_ratio, 4)
         # 5. compaction (idempotent; outside the recovery-critical
         # path — a crash mid-compaction changes nothing the logical
@@ -945,63 +921,52 @@ class CrawlEngine:
         self._write_base(self.logical_frontier(round_no + 1), round_no)
 
     def _commit_metrics(
-        self,
-        round_no: int,
-        per_part: list,
-        n_frontier: int,
-        n_disc_raw: int,
-        n_disc_new: int,
-        wall: float,
+        self, round_no: int, counts: dict, wall: float
     ) -> dict:
-        n_decided = sum(r["n_processed"] for r in per_part)
-        n_denied = sum(r["n_robots_denied"] for r in per_part)
-        n_fetched_total = sum(r["n_fetched"] for r in per_part)
-        n_retrying = int(sum(r["n_retrying"] for r in per_part))
-        n_processed = n_decided - n_retrying
+        """Commit the round's one metrics row and return its summary.
+        ``counts`` holds the decision counts observed on the round_log
+        write, the input frontier size and the two discovery counts —
+        as run_round stamps them into the delta's commit meta."""
+        n_frontier, n_decided = counts["n_frontier"], counts["n_decided"]
+        n_denied, n_fetched = counts["n_robots_denied"], counts["n_fetched"]
+        n_retrying = counts["n_retrying"]
+        n_disc_raw, n_disc_new = counts["n_disc_raw"], counts["n_disc_new"]
         n_stalled = n_frontier - n_decided  # politeness deferrals
         # discovery dedup hit-rate: fraction of discovered rows dropped
         # as duplicate / already-seen / just-decided
         dedup_hit = (
             1.0 - (n_disc_new / n_disc_raw) if n_disc_raw > 0 else 0.0
         )
+        decided_per_sec = n_decided / wall if wall > 0 else 0.0
         from pixcrawler_spark.schemas import METRICS_SCHEMA
 
-        metrics_rows = [
-            (
-                round_no,
-                int(r["partition_id"]),
-                int(n_frontier),
-                0,  # seen-skips are impossible by the frontier invariant
-                int(n_stalled),
-                int(r["n_robots_denied"]),
-                int(r["n_fetched"]),
-                n_disc_raw,
-                n_disc_new,
-                float(dedup_hit),
-                float(wall),
-                float(r["n_processed"] / wall if wall > 0 else 0.0),
-            )
-            for r in per_part
-        ] or [
-            (
-                round_no, -1, int(n_frontier), 0, int(n_stalled), 0, 0,
-                n_disc_raw, n_disc_new, float(dedup_hit), float(wall), 0.0,
-            )
-        ]
+        row = (
+            round_no,
+            n_frontier,
+            0,  # seen-skips are impossible by the frontier invariant
+            n_stalled,
+            n_denied,
+            n_fetched,
+            n_disc_raw,
+            n_disc_new,
+            float(dedup_hit),
+            float(wall),
+            float(decided_per_sec),
+        )
         # tiny telemetry commit: pyarrow write on the driver, no Spark job
         self.store.append_local(
-            "metrics", metrics_rows, METRICS_SCHEMA, tag=f"round-{round_no}"
+            "metrics", [row], METRICS_SCHEMA, tag=f"round-{round_no}"
         )
         return {
             "round": round_no,
             "n_frontier": n_frontier,
             "n_seen_skipped": 0,
-            "n_processed": int(n_processed),
-            "n_decided": int(n_decided),
-            "n_robots_denied": int(n_denied),
-            "n_fetched": int(n_fetched_total),
+            "n_processed": n_decided - n_retrying,
+            "n_decided": n_decided,
+            "n_robots_denied": n_denied,
+            "n_fetched": n_fetched,
             "n_retrying": n_retrying,
-            "n_stalled": int(n_stalled),
+            "n_stalled": n_stalled,
             "n_discovered_raw": n_disc_raw,
             "n_discovered_new": n_disc_new,
             "dedup_hit_rate": round(dedup_hit, 4),
@@ -1009,7 +974,7 @@ class CrawlEngine:
             # headline rate = DECIDED urls/sec (politeness-stalled rows
             # are untouched work, not throughput); the frontier-scan
             # rate is reported under its honest name
-            "decided_per_sec": round(n_decided / wall, 1) if wall > 0 else 0.0,
+            "decided_per_sec": round(decided_per_sec, 1),
             "frontier_scan_per_sec": (
                 round(n_frontier / wall, 1) if wall > 0 else 0.0
             ),
@@ -1152,7 +1117,11 @@ class CrawlEngine:
         for r in range(start, self.config.max_rounds + 1):
             if self.control()["status"] != "running":
                 break
-            if self.logical_frontier(r).limit(1).count() == 0:
+            # stop on an empty frontier (metadata only, no Spark job) —
+            # unless round r already passed its commit point: then it
+            # still runs, and re-entry finalizes its metrics (_recover)
+            committed = self._committed_round() >= r
+            if not committed and self._frontier_counters()[0] == 0:
                 break
             summaries.append(self.run_round(r))
         return summaries

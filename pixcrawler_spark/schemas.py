@@ -106,13 +106,12 @@ SEEN_SCHEMA = StructType(
     ]
 )
 
-# Per-round / per-partition metrics (north rule: URLs/sec, dedup
-# hit-rate, politeness stalls; reference analog: EngineStats,
-# builder/_engine.py:83-110).
+# One row per round (north rule: URLs/sec, dedup hit-rate, politeness
+# stalls; reference analog: EngineStats, builder/_engine.py:83-110).
+# Per-row lineage is results.partition_id.
 METRICS_SCHEMA = StructType(
     [
         StructField("round", IntegerType(), False),
-        StructField("partition_id", IntegerType(), False),
         StructField("n_candidates", LongType(), False),
         StructField("n_seen_skipped", LongType(), False),
         StructField("n_politeness_stalled", LongType(), False),

@@ -331,12 +331,66 @@ def test_politeness_never_exceeds_capacity(engine_run, spark, fixture_dir):
 
 
 def test_metrics_recorded(engine_run):
+    """One metrics row per round, whose counts are the round's counts
+    in results."""
     eng, summaries = engine_run
-    m = eng.store.read("metrics")
-    assert m.count() >= len(summaries)
-    assert m.where(F.col("urls_per_sec") < 0).count() == 0
+    rows = eng.store.read("metrics").collect()
+    assert sorted(r["round"] for r in rows) == [s["round"] for s in summaries]
+    assert all(r["urls_per_sec"] >= 0 for r in rows)
     total_processed = sum(s["n_processed"] for s in summaries)
-    assert total_processed == eng.store.read("results").count()
+    res = eng.store.read("results")
+    assert total_processed == res.count()
+    got = {r["round"]: (r["n_fetched"], r["n_robots_denied"]) for r in rows}
+    want = {
+        r["round"]: (r["n_fetched"], r["n_robots_denied"])
+        for r in res.groupBy("round").agg(
+            F.count(F.when(F.col("fetch_decision") == "fetched", 1)).alias(
+                "n_fetched"
+            ),
+            F.count(
+                F.when(F.col("fetch_decision") == "robots_denied", 1)
+            ).alias("n_robots_denied"),
+        ).collect()
+    }
+    assert got == want
+
+
+def test_round_deciding_nothing_counts_zero(
+    spark, fixture_dir, tmp_path, seeds
+):
+    """A round whose politeness budget admits no url (round_len_s below
+    every seed domain's crawl delay, no seed robots-denied) decides
+    nothing: its observed counts must come back 0, not missing."""
+    round_len_s = 0.1
+    robots = generate_robots(FixtureSpec(rows=ROWS, seed=SEED)).to_pydict()
+    rules = {
+        d: (delay, disallow)
+        for d, delay, disallow in zip(
+            robots["domain"], robots["crawl_delay_s"],
+            robots["disallow_prefixes"],
+        )
+    }
+    slow = []
+    for u in seeds:
+        delay, disallow = rules.get(CrawlOracle._domain(u), (None, []))
+        delay = 0.5 if delay is None else delay  # the unknown-domain default
+        if delay > round_len_s and not any(
+            CrawlOracle._path(u).startswith(p) for p in disallow
+        ):
+            slow.append(u)
+    assert slow, "fixture has no slow, allowed seed domain"
+    eng = _mk_engine(
+        spark, fixture_dir, tmp_path, slow, max_rounds=1,
+        round_len_s=round_len_s,
+    )
+    [summary] = eng.run()
+    for k in ("n_decided", "n_robots_denied", "n_fetched", "n_retrying",
+              "n_discovered_raw", "n_discovered_new"):
+        assert summary[k] == 0, (k, summary)
+    assert summary["n_stalled"] == summary["n_frontier"] == len(slow)
+    [row] = eng.store.read("metrics").collect()
+    assert (row["n_fetched"], row["n_robots_denied"]) == (0, 0)
+    assert row["n_politeness_stalled"] == len(slow)
 
 
 def test_resume_equivalence(spark, fixture_dir, tmp_path_factory, seeds, engine_run):
@@ -393,9 +447,9 @@ def test_crash_after_frontier_commit_finalizes(
 ):
     """Crash between the frontier commit point and the metrics commit:
     results/seen/frontier are complete by the commit order — re-entry
-    must only finalize the metrics row from the committed round_log,
-    not replay the round."""
-    base, _ = engine_run
+    must only finalize the metrics row from the counts stamped at the
+    commit point, not replay the round."""
+    base, base_summaries = engine_run
     store_dir = tmp_path_factory.mktemp("store_crash2")
     eng = _mk_engine(spark, fixture_dir, store_dir, seeds, max_rounds=1)
     eng.run()
@@ -417,10 +471,57 @@ def test_crash_after_frontier_commit_finalizes(
     # round 2 was finalized (wall-clock unrecoverable → 0), round 3 ran
     assert [s["round"] for s in summaries] == [2, 3]
     assert summaries[0]["wall_seconds"] == 0.0
+    # every count equals the uninterrupted round's; only the wall-clock
+    # and the rates derived from it are lost
+    want = next(s for s in base_summaries if s["round"] == 2)
+    timed = ("wall_seconds", "decided_per_sec", "frontier_scan_per_sec")
+    assert {k: v for k, v in summaries[0].items() if k not in timed} == {
+        k: want[k] for k in summaries[0] if k not in timed
+    }
     m = eng3.store.read("metrics")
-    assert m.where(F.col("round") == 2).count() > 0
+    assert m.where(F.col("round") == 2).count() == 1
     assert _seen_set(eng3) == _seen_set(base)
     assert _decisions(eng3) == _decisions(base)
+
+
+def test_crash_at_last_round_metrics_finalizes(
+    spark, fixture_dir, tmp_path, seeds, monkeypatch
+):
+    """A crawl whose frontier drains before max_rounds crashes at its
+    last round's metrics commit: that round's commit point passed and
+    the frontier it leaves is empty, yet resume must still run the
+    round, so that re-entry finalizes it and writes its metrics row."""
+    cfg = dict(max_depth=1, max_rounds=5)
+    o = _mk_oracle(fixture_dir, seeds, **cfg)
+    last = max(r.round for r in o.results)
+    assert 1 < last < cfg["max_rounds"]  # the frontier drains early
+    eng = _mk_engine(spark, fixture_dir, tmp_path, seeds, **cfg)
+    orig = eng.store.append_local
+
+    def boom(table, *args, **kwargs):
+        if table == "metrics" and kwargs.get("tag") == f"round-{last}":
+            raise RuntimeError("simulated crash before metrics commit")
+        return orig(table, *args, **kwargs)
+
+    monkeypatch.setattr(eng.store, "append_local", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        eng.run()
+    monkeypatch.undo()
+    assert eng.current_round() == last - 1
+
+    eng2 = _mk_engine(spark, fixture_dir, tmp_path, seeds, **cfg)
+    [summary] = eng2.run(resume=True)
+    assert summary["round"] == last
+    assert summary["wall_seconds"] == 0.0
+    want = [r for r in o.results if r.round == last]
+    assert summary["n_decided"] == len(want)
+    assert summary["n_fetched"] == sum(
+        r.fetch_decision == "fetched" for r in want
+    )
+    [row] = eng2.store.read("metrics").where(F.col("round") == last).collect()
+    assert row["n_fetched"] == summary["n_fetched"]
+    assert eng2.run(resume=True) == []  # drained: nothing left to run
+    assert _decisions(eng2) == _oracle_decisions(o)
 
 
 def test_pause_cancel_resume(spark, fixture_dir, tmp_path_factory, seeds, engine_run):

@@ -1,7 +1,7 @@
-"""Redirect resolution wired into the crawl round loop
-(cfg.resolve_redirects): aliases collapse to their chain terminal
-before any url enters the frontier, cycle members never enqueue, and
-the plumbing is a proven no-op when inactive."""
+"""Redirect resolution wired into the crawl round loop, on whenever
+the engine is given a redirects frame: aliases collapse to their chain
+terminal before any url enters the frontier, cycle members never
+enqueue, and an empty map is a proven no-op."""
 
 from __future__ import annotations
 
@@ -58,21 +58,10 @@ def baseline(spark, fixture_dir, tmp_path_factory, seeds):
     return _run(spark, fixture_dir, tmp_path_factory.mktemp("base"), seeds)
 
 
-def test_requires_redirects_frame(spark, fixture_dir, tmp_path, seeds):
-    with pytest.raises(ValueError, match="redirects"):
-        CrawlEngine(
-            spark,
-            f"{fixture_dir}/pages.parquet",
-            f"{fixture_dir}/robots.parquet",
-            TableStore(spark, str(tmp_path / "s")),
-            CrawlConfig(seeds=seeds, resolve_redirects=True),
-        )
-
-
 def test_empty_redirects_is_identity(
     spark, fixture_dir, tmp_path_factory, seeds, baseline
 ):
-    """Flag ON with an empty redirect map must reproduce the baseline
+    """An empty redirect map must reproduce the baseline
     crawl exactly — the resolution stage itself is a no-op plan."""
     empty = spark.createDataFrame([], "src string, dst string")
     eng = _run(
@@ -81,7 +70,6 @@ def test_empty_redirects_is_identity(
         tmp_path_factory.mktemp("empty"),
         seeds,
         redirects=empty,
-        resolve_redirects=True,
     )
     assert _seen_urls(eng) == _seen_urls(baseline)
     base_res = {
@@ -115,7 +103,6 @@ def test_aliases_collapse_and_cycles_drop(
         tmp_path_factory.mktemp("alias"),
         seeds,
         redirects=redirects,
-        resolve_redirects=True,
     )
     seen = _seen_urls(eng)
     result_urls = {
