@@ -102,7 +102,8 @@ SCALE NOTES (10^10-URL frontier):
   states: the delta not yet advanced (roll back any partial
   results/seen commits and re-run the deterministic decide plan), or
   the delta advanced (results/seen are complete by construction; the
-  metrics row is rebuilt from the counts stamped in the delta's commit
+  round ends as an uninterrupted one does — metrics row, then the
+  compaction check — from the counts stamped in the delta's commit
   meta). See ``_recover``.
 """
 
@@ -651,28 +652,34 @@ class CrawlEngine:
         normally. Rollback pieces:
 
         - tagged round-N results/metrics snapshots → dropped (manifest);
-        - bucketed seen rows from a half-committed append → detected
-          driver-side via parquet footer stats (max completed_round ≥ N,
-          no scan) and removed by a filter-rewrite — the parquet
-          stand-in for Iceberg's ``DELETE WHERE completed_round >= N``
-          (metadata-level there; a one-off table rewrite here, paid only
-          on actual crash recovery).
+        - bucketed seen rows from a half-committed append → removed by
+          ``_rollback_seen``.
 
         Round-N tombstones need no rollback: they land only with the
         delta flip, which is the commit point itself.
         """
         if self._committed_round() >= round_no:
-            return self._finalize_metrics(round_no)
+            return self._finalize_round(round_no)
         self.store.drop_tagged("results", {f"round-{round_no}"})
         self.store.drop_tagged("metrics", {f"round-{round_no}"})
-        if self.store.exists("seen"):
-            mx = self.store.column_max("seen", "completed_round")
-            if mx is not None and int(mx) >= round_no:
-                clean = self.store.read("seen", SEEN_SCHEMA).where(
-                    F.col("completed_round") < round_no
-                )
-                self.store.overwrite("seen", clean, bucket=self._bucket)
+        self._rollback_seen(round_no)
         return None
+
+    def _rollback_seen(self, round_no: int) -> None:
+        """Remove seen rows with ``completed_round >= round_no``. They
+        are detected driver-side via parquet footer stats (max
+        completed_round, no scan) and removed by a filter-rewrite — the
+        parquet stand-in for Iceberg's ``DELETE WHERE completed_round >=
+        N`` (metadata-level there; a one-off table rewrite here, paid
+        only when there is something to remove)."""
+        if not self.store.exists("seen"):
+            return
+        mx = self.store.column_max("seen", "completed_round")
+        if mx is not None and int(mx) >= round_no:
+            clean = self.store.read("seen", SEEN_SCHEMA).where(
+                F.col("completed_round") < round_no
+            )
+            self.store.overwrite("seen", clean, bucket=self._bucket)
 
     def _committed_round(self) -> int:
         """The last round whose frontier state is committed: the live
@@ -683,10 +690,11 @@ class CrawlEngine:
         meta = self._live_delta_meta() or self.store.table_meta("frontier")
         return int(meta.get("round", -1))
 
-    def _finalize_metrics(self, round_no: int) -> dict:
+    def _finalize_round(self, round_no: int) -> dict:
         """Round N crashed after its frontier commit point: results,
         seen and tombstones are complete by the commit order, and the
-        round's counts were stamped into the delta's commit meta.
+        round's counts were stamped into the delta's commit meta, so
+        it ends through ``_end_round`` like an uninterrupted round.
         Wall-clock of the crashed attempt is unrecoverable → 0."""
         meta = self._live_delta_meta()
         lmeta = self.store.table_meta("round_log")
@@ -696,7 +704,7 @@ class CrawlEngine:
                 f"last round committed to the delta (round_log meta says "
                 f"{lmeta.get('round')})"
             )
-        return self._commit_metrics(round_no, meta, wall=0.0)
+        return self._end_round(round_no, meta, wall=0.0)
 
     def _frontier_counters(self) -> tuple[int, int, int]:
         """(logical frontier size, base size, tombstones) of the
@@ -715,7 +723,6 @@ class CrawlEngine:
         return n, n, 0
 
     def run_round(self, round_no: int) -> dict:
-        cfg = self.config
         t0 = time.monotonic()
 
         # crash recovery (no-op on a clean run; see _recover)
@@ -768,6 +775,10 @@ class CrawlEngine:
         )
 
         def job_results() -> None:
+            # discovered_round is discovery lineage: the round that first
+            # enqueued the url. recover_from_round uses it to rebuild the
+            # frontier exactly (urls discovered by rolled-back rounds are
+            # re-discovered on replay, not restored)
             self.store.append(
                 "results",
                 recorded.select(
@@ -876,33 +887,41 @@ class CrawlEngine:
             n_disc_raw=int(obs_raw.get["n"]),
             n_disc_new=int(obs_new.get["n"]),
         )
-        # compaction-policy counter (chained, no Spark job): every
-        # decided url added one tombstone this round
-        n_tombstones = n_tomb_prev + counts["n_decided"]
         # commit point: everything the new frontier state supersedes is
         # durable — flip the delta (one atomic rename). Stamp the counter
-        # chain for the next round, and the round's counts for metrics
-        # finalization after a crash.
+        # chain for the next round (no Spark job; every decided url
+        # added one tombstone this round) and the round's counts, from
+        # which _end_round ends the round — here, or after a crash.
         delta_token["manifest"]["meta"].update(
             counts,
             n_frontier_next=(
                 n_frontier - counts["n_decided"] + counts["n_disc_new"]
             ),
             n_base=n_base,
-            n_tombstones=n_tombstones,
+            n_tombstones=n_tomb_prev + counts["n_decided"],
         )
         self.store.commit_staged(delta_token)
+        return self._end_round(
+            round_no, delta_token["manifest"]["meta"], time.monotonic() - t0
+        )
 
-        # 4. per-round summary + metrics table commit
-        wall = time.monotonic() - t0
-        tombstone_ratio = n_tombstones / n_base if n_base > 0 else 0.0
-        summary = self._commit_metrics(round_no, counts, wall)
+    def _end_round(self, round_no: int, meta: dict, wall: float) -> dict:
+        """Everything after round N's commit point, driven by the
+        delta's commit meta alone — so a round finalized after a crash
+        (``_finalize_round``) ends exactly as the uninterrupted one:
+        4. the metrics row and the summary; 5. compaction (idempotent;
+        outside the recovery-critical path — a crash mid-compaction
+        changes nothing the logical view can observe). Primary trigger:
+        accumulated tombstones vs base size — read degradation tracks
+        |removed|, not wall-clock rounds. compact_every is a periodic
+        override."""
+        cfg = self.config
+        n_base = int(meta["n_base"])
+        tombstone_ratio = (
+            int(meta["n_tombstones"]) / n_base if n_base > 0 else 0.0
+        )
+        summary = self._commit_metrics(round_no, meta, wall)
         summary["tombstone_ratio"] = round(tombstone_ratio, 4)
-        # 5. compaction (idempotent; outside the recovery-critical
-        # path — a crash mid-compaction changes nothing the logical
-        # view can observe). Primary trigger: accumulated tombstones
-        # vs base size — read degradation tracks |removed|, not
-        # wall-clock rounds. compact_every is a periodic override.
         do_compact = (
             cfg.compact_ratio > 0 and tombstone_ratio >= cfg.compact_ratio
         ) or (cfg.compact_every > 0 and round_no % cfg.compact_every == 0)
@@ -1087,10 +1106,7 @@ class CrawlEngine:
         tags = {f"round-{r}" for r in range(from_round, cur + 1)}
         self.store.drop_tagged("results", tags)
         self.store.drop_tagged("metrics", tags)
-        clean_seen = self.store.read("seen", SEEN_SCHEMA).where(
-            F.col("completed_round") < from_round
-        )
-        self.store.overwrite("seen", clean_seen, bucket=self._bucket)
+        self._rollback_seen(from_round)
         return self._set_control(
             status="running", recovery_attempts=c["recovery_attempts"] + 1
         )

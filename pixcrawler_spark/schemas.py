@@ -1,15 +1,18 @@
-"""Explicit StructType schemas for every engine table.
+"""Explicit StructType schemas the engine declares up front.
 
 The reference declares all schemas (JSON Schema for configs at
-builder/_config.py:31-94, SQLAlchemy DDL, Pydantic settings); nothing
-is inferred. We follow the same rule: every table the engine reads or
-writes has an explicit schema here — schema inference is never used.
+builder/_config.py:31-94, SQLAlchemy DDL, Pydantic settings). Here:
+the pages input (file-source streaming needs a schema), the frontier,
+``seen`` and ``metrics`` (read when a table may not exist yet, or
+written row by row from the driver), and the media table. The other
+engine tables — ``results``, ``round_log``, ``pages_ext`` — take their
+schema from the Spark plan that writes them; no table's schema is
+inferred from data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
     DoubleType,
@@ -32,17 +35,6 @@ PAGES_SCHEMA = StructType(
         StructField("html", BinaryType(), True),
         StructField("text", StringType(), True),
         StructField("lang", StringType(), True),
-    ]
-)
-
-# Per-domain politeness rules (robots.txt analog; synthesized fixture —
-# the reference never consults robots, SURVEY.md §2.9).
-ROBOTS_SCHEMA = StructType(
-    [
-        StructField("domain", StringType(), False),
-        StructField("disallow_prefixes", ArrayType(StringType()), True),
-        StructField("crawl_delay_s", DoubleType(), False),
-        StructField("max_per_round", IntegerType(), False),
     ]
 )
 
@@ -71,29 +63,6 @@ FRONTIER_SCHEMA = StructType(
         StructField("robots_denied", BooleanType(), False),
         StructField("crawl_delay_s", DoubleType(), False),
         StructField("max_per_round", IntegerType(), False),
-    ]
-)
-
-# Fetch results appended per round (reference analog: Image ORM row,
-# backend/database/models.py:425-540), lineage-stamped per north rule.
-# Pure DECISION LOG: text/outlinks stay normalized in pages_ext and are
-# joined on demand (CrawlEngine.results_with_text) — storing them here
-# would double the corpus and drag wide columns through every round's
-# fetch join.
-RESULTS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("domain", StringType(), False),
-        StructField("warc_ts", TimestampType(), True),
-        StructField("fetch_decision", StringType(), False),
-        StructField("depth", IntegerType(), False),
-        # discovery lineage: the round that first enqueued this url —
-        # recover_from_round uses it to rebuild the frontier exactly
-        # (urls discovered by rolled-back rounds are re-discovered on
-        # replay, not restored)
-        StructField("discovered_round", IntegerType(), False),
-        StructField("round", IntegerType(), False),
-        StructField("partition_id", IntegerType(), False),
     ]
 )
 
@@ -126,33 +95,6 @@ METRICS_SCHEMA = StructType(
         StructField("dedup_hit_rate", DoubleType(), False),
         StructField("wall_seconds", DoubleType(), False),
         StructField("urls_per_sec", DoubleType(), False),
-    ]
-)
-
-# Crawl-config "query" (reference CONFIG_SCHEMA, builder/_config.py:31-94).
-CONFIG_CATEGORIES_SCHEMA = StructType(
-    [
-        StructField("category", StringType(), False),
-        StructField("keywords", ArrayType(StringType()), True),
-    ]
-)
-
-# Documents / embeddings (training-data pipeline tables in testdata).
-DOCUMENTS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-        StructField("source", StringType(), True),
-        StructField("n_chars", LongType(), True),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("embedding", ArrayType(DoubleType()), True),
-        StructField("label", IntegerType(), True),
     ]
 )
 

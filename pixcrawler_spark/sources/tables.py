@@ -2,10 +2,12 @@
 
 The north rule targets Iceberg tables; this sandbox has no Iceberg jar,
 so the store writes parquet snapshots under a table directory with an
-atomically-renamed manifest pointer — the same append/commit/read
-surface (``append``, ``read``, ``snapshot_id``) so the engine code
-never branches on the backend. On a cluster, swap ``ParquetTableStore``
-for ``df.writeTo(tbl).append()`` against a real catalog.
+atomically-renamed manifest pointer. The surface is exactly what the
+crawl engine calls — append, staged/plain overwrite, read, commit meta,
+tagged-snapshot drop and footer stats — so the engine code never
+branches on the backend. On a cluster, the same calls map to
+``df.writeTo(tbl).append()`` / ``overwritePartitions()`` against a real
+catalog.
 
 Bucketed tables: tables whose every consumer joins on one key (the
 crawl engine's ``seen`` / ``pages_ext`` / ``frontier``, all url-keyed)
@@ -98,11 +100,11 @@ def _schema_ddl(schema: StructType) -> str:
 
 
 class TableStore:
-    """Append-only snapshot table over parquet with a manifest pointer.
+    """Snapshot tables over parquet with a manifest pointer.
 
     Layout::
 
-        <root>/<table>/data/<snapshot-uuid>/part-*.parquet   (appends)
+        <root>/<table>/data/<snapshot-uuid>/part-*.parquet   (snapshots)
         <root>/<table>/manifest.json                          (pointer)
 
     ``manifest.json`` lists committed snapshot dirs in commit order
@@ -113,6 +115,10 @@ class TableStore:
     a POSIX atomic rename. ``drop_tagged`` removes snapshots by tag,
     which the crawl engine uses to make a re-run of a crashed round
     idempotent (drop any ``round-N`` snapshots before re-appending).
+    ``overwrite`` (or ``stage_overwrite`` + ``commit_staged``) replaces
+    the table with one new snapshot and a ``meta`` dict read back by
+    ``table_meta``; ``count`` and ``column_max`` answer from parquet
+    footers without a Spark job.
 
     Bucketed tables (``bucket=(cols, n)`` on overwrite/append) live as
     external Spark catalog tables instead; see module docstring. Their
@@ -141,11 +147,6 @@ class TableStore:
             return {"snapshots": [], "schema": None, "bucketed": None, "meta": {}}
         with open(p) as f:
             m = json.load(f)
-        # back-compat: plain-string snapshot entries
-        m["snapshots"] = [
-            s if isinstance(s, dict) else {"snap": s, "tag": None}
-            for s in m.get("snapshots", [])
-        ]
         m.setdefault("bucketed", None)
         m.setdefault("meta", {})
         return m
@@ -156,6 +157,9 @@ class TableStore:
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, self._manifest_path(table))
+
+    def _snap_dir(self, table: str, snap: str) -> str:
+        return os.path.join(self._tdir(table), "data", snap)
 
     def _new_snap(self) -> str:
         return f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
@@ -238,7 +242,7 @@ class TableStore:
                 f"overwrite() with bucket= to convert, or append plain"
             )
         snap = self._new_snap()
-        data_dir = os.path.join(self._tdir(table), "data", snap)
+        data_dir = self._snap_dir(table, snap)
         df.write.mode("overwrite").parquet(data_dir)
         manifest["snapshots"].append({"snap": snap, "tag": tag})
         manifest["schema"] = df.schema.json()
@@ -259,12 +263,14 @@ class TableStore:
         job runs concurrently with the results/seen appends, but its
         commit happens strictly after theirs, making the frontier flip
         the round's single commit point. A crash between stage and
-        commit leaks only an orphan data dir (never a visible state).
+        commit is never visible, but it leaks the staged data dir: it
+        is referenced by no manifest and stays on disk until ``drop``
+        deletes the table.
         """
         old = self._read_manifest(table)
         snap = self._new_snap()
-        data_dir = os.path.join(self._tdir(table), "data", snap)
-        token: dict = {"table": table, "old": old, "meta": meta or {}}
+        data_dir = self._snap_dir(table, snap)
+        token: dict = {"table": table, "old": old}
         if bucket is not None:
             cols, n = bucket
             gen = (old["bucketed"]["generation"] + 1) if old["bucketed"] else 1
@@ -313,10 +319,7 @@ class TableStore:
         elif token["manifest"]["bucketed"] is not None:
             # plain → bucketed conversion: old plain snapshots are dead
             for s in old["snapshots"]:
-                shutil.rmtree(
-                    os.path.join(self._tdir(table), "data", s["snap"]),
-                    ignore_errors=True,
-                )
+                shutil.rmtree(self._snap_dir(table, s["snap"]), ignore_errors=True)
         return token["name"]
 
     def overwrite(
@@ -347,108 +350,9 @@ class TableStore:
             if schema is None:
                 raise FileNotFoundError(f"table {table} has no snapshots")
             return self.spark.createDataFrame([], schema)
-        paths = [
-            os.path.join(self._tdir(table), "data", s["snap"])
-            for s in manifest["snapshots"]
-        ]
-        return self.spark.read.parquet(*paths)
-
-    def read_at(self, table: str, snapshot: str) -> DataFrame:
-        """Non-destructive time travel (the Iceberg ``VERSION AS OF``
-        analog): read the table as of ``snapshot`` — every snapshot up
-        to and including it — without touching the manifest.
-        ``rollback_to`` is the destructive variant; this one lets a
-        debugging/audit reader inspect any committed state while the
-        crawl keeps appending."""
-        manifest = self._read_manifest(table)
-        if manifest["bucketed"] is not None:
-            raise ValueError("read_at is not supported for bucketed tables")
-        snaps = [s["snap"] for s in manifest["snapshots"]]
-        if snapshot not in snaps:
-            raise KeyError(snapshot)
-        paths = [
-            os.path.join(self._tdir(table), "data", s)
-            for s in snaps[: snaps.index(snapshot) + 1]
-        ]
-        return self.spark.read.parquet(*paths)
-
-    def read_changes(
-        self,
-        table: str,
-        since: str | None = None,
-        until: str | None = None,
-    ) -> DataFrame:
-        """Incremental (CDC) scan — the Iceberg incremental-append-scan
-        analog (``spark.read.option("start-snapshot-id", ...)``): the
-        rows committed AFTER snapshot ``since`` (exclusive; ``None`` =
-        from the beginning) up to and including ``until`` (``None`` =
-        current head), each stamped with ``_commit_snapshot`` (the
-        snapshot that committed it) and ``_change_type`` ('insert' —
-        the store is append-only; deletes happen as whole-generation
-        overwrites, which reset history like Iceberg's
-        ``replace``-type snapshots).
-
-        This is the O(delta) feed for downstream incremental
-        consumers — per-round dedup (dedup_minhash_incremental),
-        training-data export, index maintenance — reading exactly the
-        new snapshot dirs instead of rescanning the table: the scan
-        cost is the delta's bytes regardless of table size. Scans the
-        bounded snapshot list driver-side (same as ``read``); the data
-        itself never moves through the driver.
-
-        Raises ``KeyError`` if ``since``/``until`` is not a live
-        snapshot — in particular a snapshot folded away by
-        ``expire_snapshots`` can no longer anchor an incremental read
-        (the honest Iceberg behavior: expired history is gone; the
-        consumer must fall back to a full scan)."""
-        manifest = self._read_manifest(table)
-        if manifest["bucketed"] is not None:
-            raise ValueError(
-                "read_changes is not supported for bucketed tables: "
-                "bucketed appends bypass the snapshot manifest — guard "
-                "incremental reads by a round column instead"
-            )
-        snaps = [s["snap"] for s in manifest["snapshots"]]
-        lo = 0
-        if since is not None:
-            if since not in snaps:
-                raise KeyError(since)
-            lo = snaps.index(since) + 1
-        hi = len(snaps)
-        if until is not None:
-            if until not in snaps:
-                raise KeyError(until)
-            hi = snaps.index(until) + 1
-        if hi < lo:
-            raise ValueError(
-                f"until={until!r} precedes since={since!r} in commit order"
-            )
-        delta = snaps[lo:hi]
-        if not delta:
-            if manifest["schema"] is None:
-                raise FileNotFoundError(f"table {table} has no snapshots")
-            schema = StructType.fromJson(json.loads(manifest["schema"]))
-            empty = self.spark.createDataFrame([], schema)
-            return empty.select(
-                "*",
-                F.lit(None).cast("string").alias("_commit_snapshot"),
-                F.lit("insert").alias("_change_type"),
-            ).where(F.lit(False))
-        parts = []
-        for s in delta:
-            parts.append(
-                self.spark.read.parquet(
-                    os.path.join(self._tdir(table), "data", s)
-                ).select(
-                    "*",
-                    F.lit(s).alias("_commit_snapshot"),
-                    F.lit("insert").alias("_change_type"),
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self.spark.read.parquet(
+            *[self._snap_dir(table, s["snap"]) for s in manifest["snapshots"]]
+        )
 
     def append_local(self, table: str, rows: list[tuple], schema: StructType,
                      tag: str | None = None) -> str:
@@ -464,7 +368,7 @@ class TableStore:
         if manifest["bucketed"] is not None:
             raise ValueError("append_local not supported for bucketed tables")
         snap = self._new_snap()
-        data_dir = os.path.join(self._tdir(table), "data", snap)
+        data_dir = self._snap_dir(table, snap)
         os.makedirs(data_dir, exist_ok=True)
         arrays, names = [], []
         for i, f in enumerate(schema.fields):
@@ -505,20 +409,18 @@ class TableStore:
         with open(meta_path) as f:
             return json.load(f)
 
-    def count(self, table: str) -> int:
-        """Exact row count from parquet footers (driver-side metadata
-        read, no Spark job — the Iceberg manifest-stats analog)."""
+    def _footers(self, table: str):
+        """Parquet footer of every committed data file of ``table``
+        (the current bucketed generation, or the manifest's snapshot
+        dirs) — a driver-side metadata read, no Spark job. Unreadable
+        files are skipped."""
         import pyarrow.parquet as pq
 
         manifest = self._read_manifest(table)
         if manifest["bucketed"] is not None:
             dirs = [manifest["bucketed"]["location"]]
         else:
-            dirs = [
-                os.path.join(self._tdir(table), "data", s["snap"])
-                for s in manifest["snapshots"]
-            ]
-        total = 0
+            dirs = [self._snap_dir(table, s["snap"]) for s in manifest["snapshots"]]
         for d in dirs:
             if not os.path.isdir(d):
                 continue
@@ -527,144 +429,40 @@ class TableStore:
                     f.startswith("part-") and not f.endswith(".crc")
                 ):
                     try:
-                        total += pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+                        yield pq.ParquetFile(os.path.join(d, f)).metadata
                     except Exception:
-                        pass
-        return total
+                        continue
+
+    def count(self, table: str) -> int:
+        """Exact row count from parquet footers (no Spark job — the
+        Iceberg manifest-stats analog)."""
+        return sum(md.num_rows for md in self._footers(table))
 
     def column_max(self, table: str, col: str):
-        """Max value of ``col`` from parquet row-group statistics
-        (driver-side footer read, no Spark job — the Iceberg
-        manifest-stats analog). Returns None for an empty/absent table
-        or when no row group carries stats for the column. The crawl
-        engine uses this to detect half-committed bucketed ``seen``
-        appends on crash recovery (``max(completed_round)``) without
-        scanning data."""
-        import pyarrow.parquet as pq
-
-        manifest = self._read_manifest(table)
-        if manifest["bucketed"] is not None:
-            dirs = [manifest["bucketed"]["location"]]
-        else:
-            dirs = [
-                os.path.join(self._tdir(table), "data", s["snap"])
-                for s in manifest["snapshots"]
-            ]
+        """Max value of ``col`` from parquet row-group statistics (no
+        Spark job — the Iceberg manifest-stats analog). Returns None
+        for an empty/absent table or when no row group carries stats
+        for the column. The crawl engine uses this to detect
+        half-committed bucketed ``seen`` appends on crash recovery
+        (``max(completed_round)``) without scanning data."""
         best = None
-        for d in dirs:
-            if not os.path.isdir(d):
+        for md in self._footers(table):
+            if not md.num_row_groups:
                 continue
-            for f in os.listdir(d):
-                if not (
-                    f.endswith(".parquet")
-                    or (f.startswith("part-") and not f.endswith(".crc"))
-                ):
-                    continue
-                try:
-                    md = pq.ParquetFile(os.path.join(d, f)).metadata
-                except Exception:
-                    continue
-                idx = None
-                if md.num_row_groups:
-                    rg0 = md.row_group(0)
-                    for i in range(rg0.num_columns):
-                        if rg0.column(i).path_in_schema == col:
-                            idx = i
-                            break
-                if idx is None:
-                    continue
-                for rgi in range(md.num_row_groups):
-                    st = md.row_group(rgi).column(idx).statistics
-                    if st is not None and st.has_min_max:
-                        if best is None or st.max > best:
-                            best = st.max
-        return best
-
-    def snapshots(self, table: str) -> list[str]:
-        return [s["snap"] for s in self._read_manifest(table)["snapshots"]]
-
-    def expire_snapshots(
-        self, table: str, keep_last: int, fold_tag: str = "_expired_fold"
-    ) -> int:
-        """Iceberg ``expire_snapshots`` + ``rewrite_data_files`` analog
-        for append-mostly round tables (results, round_log, metrics).
-
-        A crawl commits one snapshot per table per round; at 10^5
-        rounds the manifest and the per-read file fan-out grow without
-        bound — the metadata failure mode of any long-running ingest.
-        This FOLDS every snapshot older than the newest ``keep_last``
-        into one consolidated snapshot (row content preserved exactly,
-        written once, coalesced), then flips the manifest atomically:
-        readers see identical data before and after; only time travel
-        (``read_at``/``rollback_to``) into the folded range is given
-        up, exactly Iceberg's expiration semantics. The newest
-        ``keep_last`` snapshots keep their snap ids and tags, so the
-        crash-recovery horizon (``drop_tagged`` of the current round)
-        must be <= ``keep_last``. Returns the number of snapshots
-        folded (0 = nothing to do). Bucketed tables are
-        single-generation already and are rejected.
-
-        Reference analog: none — PixCrawler keeps per-keyword progress
-        JSON forever (progress.json grows with the crawl); this is the
-        from-scratch maintenance story the 10^10-URL north rule needs.
-        """
-        if keep_last < 0:
-            raise ValueError("keep_last must be >= 0")
-        manifest = self._read_manifest(table)
-        if manifest["bucketed"] is not None:
-            raise ValueError(
-                f"expire_snapshots not supported for bucketed table {table!r}"
+            rg0 = md.row_group(0)
+            idx = next(
+                (i for i in range(rg0.num_columns)
+                 if rg0.column(i).path_in_schema == col),
+                None,
             )
-        old = manifest["snapshots"][: len(manifest["snapshots"]) - keep_last]
-        if len(old) < 2:
-            return 0  # nothing worth folding
-        paths = [
-            os.path.join(self._tdir(table), "data", s["snap"]) for s in old
-        ]
-        fold_snap = self._new_snap()
-        fold_dir = os.path.join(self._tdir(table), "data", fold_snap)
-        # ~128MB target files (rewrite_data_files' default), sized from
-        # the inputs' on-disk bytes — a driver-side stat, no Spark job
-        nbytes = sum(
-            os.path.getsize(os.path.join(r, f))
-            for p in paths
-            for r, _, fs in os.walk(p)
-            for f in fs
-        )
-        nfiles = max(1, nbytes // (128 << 20))
-        df = self.spark.read.parquet(*paths)
-        df.coalesce(nfiles).write.mode("overwrite").parquet(fold_dir)
-        manifest["snapshots"] = [
-            {"snap": fold_snap, "tag": fold_tag}
-        ] + manifest["snapshots"][len(old):]
-        self._write_manifest(table, manifest)  # atomic flip
-        for p in paths:
-            shutil.rmtree(p, ignore_errors=True)
-        return len(old)
-
-    def remove_orphans(self, table: str) -> int:
-        """Iceberg ``remove_orphan_files`` analog: delete data dirs not
-        referenced by the committed manifest — the leftovers of writes
-        that crashed between ``stage_overwrite`` and ``commit_staged``
-        (the documented leak of the staged-commit protocol). Must not
-        run concurrently with an in-flight staged write on the same
-        table (single-driver rule, same as Iceberg's caveat that the
-        retention window must exceed any in-flight commit). Returns the
-        number of directories removed."""
-        manifest = self._read_manifest(table)
-        data_root = os.path.join(self._tdir(table), "data")
-        if not os.path.isdir(data_root):
-            return 0
-        if manifest["bucketed"] is not None:
-            live = {os.path.basename(manifest["bucketed"]["location"])}
-        else:
-            live = {s["snap"] for s in manifest["snapshots"]}
-        removed = 0
-        for d in os.listdir(data_root):
-            if d not in live:
-                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
-                removed += 1
-        return removed
+            if idx is None:
+                continue
+            for rgi in range(md.num_row_groups):
+                st = md.row_group(rgi).column(idx).statistics
+                if st is not None and st.has_min_max:
+                    if best is None or st.max > best:
+                        best = st.max
+        return best
 
     def drop_tagged(self, table: str, tags: set[str]) -> int:
         """Remove snapshots whose tag is in ``tags`` (crash-recovery:
@@ -680,22 +478,8 @@ class TableStore:
         manifest["snapshots"] = keep
         self._write_manifest(table, manifest)
         for s in dropped:
-            shutil.rmtree(
-                os.path.join(self._tdir(table), "data", s["snap"]),
-                ignore_errors=True,
-            )
+            shutil.rmtree(self._snap_dir(table, s["snap"]), ignore_errors=True)
         return len(dropped)
-
-    def rollback_to(self, table: str, snapshot: str) -> None:
-        """Drop snapshots committed after ``snapshot`` (time travel)."""
-        manifest = self._read_manifest(table)
-        if manifest["bucketed"] is not None:
-            raise ValueError("rollback_to is not supported for bucketed tables")
-        snaps = [s["snap"] for s in manifest["snapshots"]]
-        if snapshot not in snaps:
-            raise KeyError(snapshot)
-        manifest["snapshots"] = manifest["snapshots"][: snaps.index(snapshot) + 1]
-        self._write_manifest(table, manifest)
 
     def drop(self, table: str) -> None:
         manifest = self._read_manifest(table)

@@ -466,22 +466,30 @@ def test_crash_after_frontier_commit_finalizes(
     assert int(eng2.store.table_meta("frontier_added")["round"]) == 2
     assert eng2.current_round() == 1  # metrics lost in the crash
 
-    eng3 = _mk_engine(spark, fixture_dir, store_dir, seeds, max_rounds=3)
-    summaries = eng3.run(resume=True)
-    # round 2 was finalized (wall-clock unrecoverable → 0), round 3 ran
-    assert [s["round"] for s in summaries] == [2, 3]
-    assert summaries[0]["wall_seconds"] == 0.0
-    # every count equals the uninterrupted round's; only the wall-clock
-    # and the rates derived from it are lost
+    # resume stops after round 2 first: the physical frontier layout
+    # it leaves is checked before round 3 changes it
+    eng3 = _mk_engine(spark, fixture_dir, store_dir, seeds, max_rounds=2)
+    [summary] = eng3.run(resume=True)
+    # round 2 was finalized (wall-clock unrecoverable → 0)
+    assert summary["round"] == 2
+    assert summary["wall_seconds"] == 0.0
+    # every count, the tombstone ratio and the compaction flag equal the
+    # uninterrupted round's; only the wall-clock and the rates derived
+    # from it are lost
     want = next(s for s in base_summaries if s["round"] == 2)
     timed = ("wall_seconds", "decided_per_sec", "frontier_scan_per_sec")
-    assert {k: v for k, v in summaries[0].items() if k not in timed} == {
-        k: want[k] for k in summaries[0] if k not in timed
-    }
+    keys = (summary.keys() | want.keys()) - set(timed)
+    assert {k: summary.get(k) for k in keys} == {k: want.get(k) for k in keys}
+    # finalizing ran the compaction check: the base was rewritten (the
+    # delta retired) exactly when the uninterrupted round 2 compacted
+    assert (eng3._live_delta_meta() is None) == want.get("compacted", False)
     m = eng3.store.read("metrics")
     assert m.where(F.col("round") == 2).count() == 1
-    assert _seen_set(eng3) == _seen_set(base)
-    assert _decisions(eng3) == _decisions(base)
+
+    eng4 = _mk_engine(spark, fixture_dir, store_dir, seeds, max_rounds=3)
+    assert [s["round"] for s in eng4.run(resume=True)] == [3]
+    assert _seen_set(eng4) == _seen_set(base)
+    assert _decisions(eng4) == _decisions(base)
 
 
 def test_crash_at_last_round_metrics_finalizes(

@@ -5,7 +5,6 @@ manifest, the cross-session resume path)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -96,28 +95,3 @@ def test_bucketed_overwrite_while_reading_old_generation(spark, tmp_path):
     out = store.read("f")
     assert out.count() == 100
     assert out.where(F.col("r") == 2).count() == 100
-
-
-def test_rollback_unsupported_for_bucketed(spark, tmp_path):
-    store = TableStore(spark, str(tmp_path / "s7"))
-    store.overwrite("seen", _urls(spark, 0, 10, 1), bucket=(("url",), 4))
-    with pytest.raises(ValueError):
-        store.rollback_to("seen", "whatever")
-
-
-def test_read_at_time_travel_nondestructive(spark, tmp_path):
-    import pytest
-
-    store = TableStore(spark, str(tmp_path / "tt"))
-    store.append("t", _urls(spark, 0, 10, 1), tag="round-1")
-    snap1 = store.snapshots("t")[-1]
-    store.append("t", _urls(spark, 10, 30, 2), tag="round-2")
-    snap2 = store.snapshots("t")[-1]
-    # as-of reads see exactly the committed prefix…
-    assert store.read_at("t", snap1).count() == 10
-    assert store.read_at("t", snap2).count() == 30
-    # …and do not modify current state (unlike rollback_to)
-    assert store.read("t").count() == 30
-    assert store.snapshots("t") == [snap1, snap2]
-    with pytest.raises(KeyError):
-        store.read_at("t", "nope")
