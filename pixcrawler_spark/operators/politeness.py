@@ -15,8 +15,10 @@ queue realized as window-ranked batches. Robots-denied urls never
 consume budget; they are decided (and recorded) without fetching.
 
 Skew: the window partitions by registrable domain; Zipf-skewed hosts
-produce hot partitions, which is why the round pre-repartitions by a
-salted domain key (plans/crawl.py) and AQE skew handling stays on.
+produce hot partitions. The round cuts them with a literal global
+capacity bound next to the per-domain one, so Spark's WindowGroupLimit
+runs a map-side top-K per domain before the exchange (SCALE NOTES in
+plans/crawl.py).
 """
 
 from __future__ import annotations

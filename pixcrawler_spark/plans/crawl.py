@@ -118,6 +118,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pixcrawler_spark.operators import politeness as pol
+from pixcrawler_spark.operators.urlresolve import resolve_reference
 from pixcrawler_spark.schemas import FRONTIER_SCHEMA, SEEN_SCHEMA
 from pixcrawler_spark.session import keep_observed_branches
 from pixcrawler_spark.sources.tables import TableStore
@@ -169,21 +170,20 @@ class CrawlConfig:
     # periodic override (0 = off); ratio 0 disables the ratio trigger.
     compact_ratio: float = 0.25
     compact_every: int = 0
-    # Resolve RELATIVE outlinks (../x, ./y, /abs, //host/p, ?q=2)
-    # against the linking page's url before they enter the frontier —
-    # RFC 3986 §5 as a zero-shuffle expression tree
-    # (operators/urlresolve.py). Without it every relative form of a
-    # page is a distinct frontier row that can never match the pages
-    # table. Absolute hrefs pass through verbatim, so a corpus of
-    # absolute links discovers the same set under either setting; OFF
-    # by default to keep the flag-off plan shape untouched.
-    resolve_relative: bool = False
 
     def validate(self) -> None:
         if not self.seeds:
             raise ValueError("seeds must be non-empty")
         if self.max_depth < 0 or self.max_rounds < 1:
             raise ValueError("max_depth >= 0 and max_rounds >= 1 required")
+        if self.round_len_s <= 0:
+            # a crawl-delayed domain's capacity is round_len_s / delay:
+            # at 0 its urls would stall every round until max_rounds
+            raise ValueError("round_len_s > 0 required")
+        if self.n_buckets < 1:
+            raise ValueError("n_buckets >= 1 required")
+        if not self.engines:
+            raise ValueError("engines must be non-empty")
         unknown = [e for e in self.engines if e not in ENGINE_SCORES]
         if unknown:
             raise ValueError(f"unknown engines: {unknown}")
@@ -212,7 +212,6 @@ class CrawlEngine:
         store: TableStore,
         config: CrawlConfig,
         static_store: TableStore | None = None,
-        redirects: DataFrame | None = None,
     ):
         config.validate()
         # run_round reads its discovery counts from Observations
@@ -235,67 +234,17 @@ class CrawlEngine:
             if isinstance(robots_path, DataFrame)
             else spark.read.parquet(robots_path)
         )
-        # (src, dst) redirect map; given one, _resolve_aliases is on
-        self.redirects = redirects
-        self._alias_map_df: DataFrame | None = None
-
-    def _alias_map(self) -> DataFrame:
-        """Resolve the (static) redirect map ONCE per crawl: pointer
-        doubling runs over the alias universe a single time, and every
-        round pays only one equi-join of its enqueue delta against the
-        persisted (alias → terminal, is_cycle) map — never the log-hop
-        join cascade per round."""
-        if self._alias_map_df is None:
-            from pixcrawler_spark.operators.redirects import (
-                resolve_redirects,
-            )
-
-            aliases = self.redirects.select(
-                F.col("src").alias("url")
-            ).dropDuplicates(["url"])
-            res = resolve_redirects(aliases, self.redirects)
-            m = res.select("url", "final_url", "is_cycle").persist()
-            m.count()  # materialize, then release doubling internals
-            cached = getattr(res, "_doubling_cached", None)
-            if cached is not None:
-                cached.unpersist()
-            self._alias_map_df = m
-        return self._alias_map_df
-
-    def _resolve_aliases(self, rows: DataFrame) -> DataFrame:
-        """Map every url in ``rows`` to its redirect-chain terminal,
-        dropping cycle members (redirect loops — crawler traps), so the
-        seen set and politeness budgets are charged to the page actually
-        fetched and an alias is never crawled apart from its target.
-        No-op when the engine has no redirects frame. Runs over the
-        enqueue-time delta only — never the accumulated frontier — and
-        before domain stamping, because the TERMINAL's host is the one
-        whose politeness budget the fetch spends."""
-        if self.redirects is None:
-            return rows
-        m = self._alias_map()
-        other = [c for c in rows.columns if c != "url"]
-        joined = rows.join(m, "url", "left")
-        return joined.where(
-            F.col("is_cycle").isNull() | ~F.col("is_cycle")
-        ).select(
-            F.coalesce("final_url", F.col("url")).alias("url"), *other
-        )
 
     # -- state ---------------------------------------------------------------
     def frontier_from(self, urls_df: DataFrame) -> DataFrame:
         """Build a depth-0 frontier from any DataFrame with a url column
         (used by run() for config seeds and by the bench harness to seed
         the whole corpus without a driver-side list). Drops duplicate
-        urls (frontier invariant; redirect aliases collapse to their
-        terminal first when the engine has a redirects frame, so two
-        seed aliases of one page yield one frontier row)."""
+        urls (frontier invariant)."""
         cfg = self.config
         depth = F.lit(0)
         engine = _engine_expr(depth, cfg.engines)
-        rows = self._resolve_aliases(
-            urls_df.select("url").dropDuplicates(["url"])
-        ).dropDuplicates(["url"]).select(
+        rows = urls_df.select("url").dropDuplicates(["url"]).select(
             "url",
             pol.domain_expr("url").alias("domain"),
             depth.cast("int").alias("depth"),
@@ -551,36 +500,25 @@ class CrawlEngine:
         next_depth = (F.col("depth") + 1).cast("int")
         # merge hint: the fetched set grows with the politeness budget —
         # a driver-built broadcast would serialize with round size; SMJ
-        # scans bucketed pages_ext exchange-free, fetched urls shuffle
-        if cfg.resolve_relative:
-            from pixcrawler_spark.operators.urlresolve import (
-                resolve_reference,
+        # scans bucketed pages_ext exchange-free, fetched urls shuffle.
+        # Each href resolves against its own page url (RFC 3986 §5,
+        # operators/urlresolve.py) — a narrow map after the explode.
+        # An absolute href without fragment or dot segment comes back
+        # unchanged; a relative one would otherwise never match pages.
+        discovered = (
+            links.join(fetched_urls.hint("merge"), "url")
+            .select(
+                next_depth.alias("depth"),
+                F.col("url").alias("base_url"),
+                F.explode("outlinks").alias("href"),
             )
-
-            # keep the linking page's url through the explode so each
-            # href resolves against its own base — still a narrow map
-            discovered = (
-                links.join(fetched_urls.hint("merge"), "url")
-                .select(
-                    next_depth.alias("depth"),
-                    F.col("url").alias("base_url"),
-                    F.explode("outlinks").alias("href"),
-                )
-                .select(
-                    "depth",
-                    resolve_reference(
-                        F.col("base_url"), F.col("href")
-                    ).alias("url"),
-                )
+            .select(
+                "depth",
+                resolve_reference(F.col("base_url"), F.col("href")).alias(
+                    "url"
+                ),
             )
-        else:
-            discovered = links.join(fetched_urls.hint("merge"), "url").select(
-                next_depth.alias("depth"), F.explode("outlinks").alias("url")
-            )
-        # alias collapse BEFORE the seen join/dedup: an outlink to a
-        # redirect alias is a discovery of its terminal (no-op without
-        # a redirects frame)
-        discovered = self._resolve_aliases(discovered)
+        )
         engine = _engine_expr(F.col("depth"), cfg.engines)
         # politeness stamp happens later, on the deduped seen-filtered
         # delta (run_round.job_frontier) — the smallest possible set

@@ -3,222 +3,39 @@
 Each query is a (Spark callable, DuckDB oracle SQL) pair over the
 driver-generated testdata tables — the correctness contract of
 ``__spark_entry__.py``. Importing this package registers everything.
+The registry keeps registration order; every reader looks queries up
+by name or sorts the names.
 """
 
 from pixcrawler_spark.queries.registry import REGISTRY, Query, register
 
-# Import for registration side effects. ORDER MATTERS: the driver's
-# correctness harness evaluates the first 50 registry entries, so the
-# window ROTATES round to round such that the union of any two
-# consecutive CORRECTNESS_r{N}.json files covers every registered
-# query. Rotation schedule:
-#   r03 window: media, jobops, pipeline, scalepath, webtext, urlgraph,
-#               crawlops, advanced, q01-q04  (q05-q20 overflowed)
-#   r04 window: roundfive's 7 sketch/scheduling queries, pipeline head
-#               (dedup/ann/text core), roundfour's 6 (PSL, incremental
-#               minhash, recall frontier, PQ/IVF-PQ), trainprep's 8,
-#               analytics q05-q20 + q01-q02. Overflow: q03-q04,
-#               advanced q21-q29, crawlops, scalepath/webtext/media/
-#               jobops tails — ALL with green r03 driver rows.
-# The overflow queries are NOT unverified: tests/test_queries_oracle.py
-# parameterizes over the ENTIRE registry and runs every query against
-# its DuckDB oracle on every pytest run, driver cap or not.
-# roundfive registers FIRST: sketches (HLL/CMS/KMV), recrawl schedule,
-# trap detection, span dedup, mixture sampling — 7 new queries that
-# must land inside the r04 window. They displace q01-q04 + the
-# advanced tail (q21+) into the overflow; every displaced query has a
-# green CORRECTNESS_r03 row (q01-q04 defined last in analytics.py so
-# q05-q20 — rowless since r02 — keep their window slots).
-# (roundfive imports only operators/sketches, which registers nothing,
-# so exactly its 7 queries take positions 1-7.)
+# Imported for their registration side effects.
 from pixcrawler_spark.queries import roundfive as _roundfive  # noqa: F401
 from pixcrawler_spark.queries import roundfour as _roundfour  # noqa: F401
-# trainprep's 5 corpus-hygiene queries register inside the r04 window;
-# the 5 entries they displace past the 50-cap (q29_quality_score +
-# crawl_fetch_decision/politeness_admission/priority_order/serp_seeding)
-# all carry green CORRECTNESS_r03 rows, so union(r03, r04) still covers
-# the whole registry.
 from pixcrawler_spark.queries import trainprep as _trainprep  # noqa: F401
-# datasel's 3 data-selection queries (Gopher gates, shard packing,
-# DSIR importance) are new in r04 and register inside the window; the
-# rotation fix-up below demotes three more r03-green pipeline queries
-# to make room.
 from pixcrawler_spark.queries import datasel as _datasel  # noqa: F401
 from pixcrawler_spark.queries import analytics as _analytics  # noqa: F401
 from pixcrawler_spark.queries import advanced as _advanced  # noqa: F401
 from pixcrawler_spark.queries import crawlops as _crawlops  # noqa: F401
 from pixcrawler_spark.queries import urlgraph as _urlgraph  # noqa: F401
 # webtext transitively imports pipeline + scalepath, so those two
-# register here (before webtext's own queries) regardless of order below
+# register here (before webtext's own queries)
 from pixcrawler_spark.queries import webtext as _webtext  # noqa: F401
 from pixcrawler_spark.queries import scalepath as _scalepath  # noqa: F401
 from pixcrawler_spark.queries import pipeline as _pipeline  # noqa: F401
 from pixcrawler_spark.queries import media as _media  # noqa: F401
 from pixcrawler_spark.queries import jobops as _jobops  # noqa: F401
-# frontiersched's 5 queries (redirect resolve, Good-Turing novelty,
-# adaptive delay, robots wildcards, SURT keys) are late-r04 additions registered
-# here — PAST the 50-cap, so the r04 window (q05-q20 + the round's
-# headliners) is undisturbed. They are
-# pytest-oracle-covered now and, with graph_hits_scores and
-# graph_opic_cash (urlgraph), crawl_url_resolve (below),
-# text_source_reputation, and the webtext_ingest pair
-# (webtext_warc_records, text_boilerplate_density), the ELEVEN
-# queries the r05 window MUST include (no driver row in any round
-# yet); the rest of the r05 window should be the r04 overflow, all
-# r03-green.
 from pixcrawler_spark.queries import frontiersched as _frontiersched  # noqa: F401,E501
-# webtext_ingest (WARC framing, boilerplate density) — late-r04, past
-# the cap like frontiersched; pytest-oracle-covered, r05-window bound.
 from pixcrawler_spark.queries import webtext_ingest as _webtext_ingest  # noqa: F401,E501
-# winnow (MOSS rolling-hash fingerprints, census + similarity pairs) —
-# late-r04, past the cap; pytest-oracle-covered, r05-window bound.
 from pixcrawler_spark.queries import winnow as _winnow  # noqa: F401
-# roundsix: weighted reservoir sampling, triangle counting, embedding
-# decontamination — NEW in r05, registered inside the window per the
-# "register inside the current window or not at all" rule (VERDICT r04
-# item 6); they displace three r03-green refreshers from the tail.
 from pixcrawler_spark.queries import roundsix as _roundsix  # noqa: F401
-# roundseven: URL template mining, k-core peeling, MG-pruned exact
-# heavy hitters, median/MAD latency anomaly, positional phrase search
-# — NEW in r05, registered inside the window per the same rule; they
-# displace five more r03-green refreshers from the tail.
 from pixcrawler_spark.queries import roundseven as _roundseven  # noqa: F401
-# roundeight: Poisson-bootstrap CIs, bucketed IP-range join,
-# readability scoring, mojibake detection — NEW in r05, registered
-# inside the window; they displace four more r03-green refreshers.
 from pixcrawler_spark.queries import roundeight as _roundeight  # noqa: F401
-# retrieval: BM25 ranked retrieval — NEW in r05, in-window; displaces
-# one more r03-green refresher (dedup_perceptual_ahash_png; base +
-# jpeg variants stay windowed).
 from pixcrawler_spark.queries import retrieval as _retrieval  # noqa: F401
-# lakehouse: Z-order keys, zone-map pruning audit, table profiling —
-# NEW in r05, in-window; displace three more r03-green refreshers.
 from pixcrawler_spark.queries import lakehouse as _lakehouse  # noqa: F401
-# roundnine: Neyman stratified sampling, keyword typo dedup — NEW in
-# r05, in-window; displace two more r03-green refreshers.
 from pixcrawler_spark.queries import roundnine as _roundnine  # noqa: F401
-# roundten: Gini crawl concentration, KS drift, conditional-GET
-# revisit planning, duplicate-cluster canonical election — NEW in
-# r05, in-window; displace four more r03-green refreshers.
 from pixcrawler_spark.queries import roundten as _roundten  # noqa: F401
-# roundeleven: bottom-k containment dedup, co-citation similarity,
-# EWMA host-load forecast, CUSUM changepoint — NEW in r05, in-window;
-# displace four more r03-green refreshers.
 from pixcrawler_spark.queries import roundeleven as _roundeleven  # noqa: F401,E501
-# roundtwelve: Jain's fairness, Zipf-fit quality gate, compaction
-# planning, capture-recapture sizing — NEW in r05, in-window; displace
-# the last four refresher slots except crawl_seen_anti_join (THE core
-# op keeps its row).
 from pixcrawler_spark.queries import roundtwelve as _roundtwelve  # noqa: F401,E501
-
-# ---------------------------------------------------------------------------
-# r05 window (explicit). The driver's correctness harness evaluates the
-# FIRST 50 registry entries, so the window rotates each round. The r05
-# window is chosen by priority:
-#   1. crawl_trap_detection — the ONLY red r04 row (ANSI getItem crash,
-#      fixed in operators/traps.py); must re-prove green.
-#   2. The 13 queries that have NEVER had a driver row (late-r04
-#      additions past the cap): winnow pair, frontiersched five,
-#      HITS/OPIC, url_resolve, WARC/boilerplate pair, source_reputation.
-#   3. New r05 queries — the "register inside the current window or not
-#      at all" rule from VERDICT r04 #6.
-#   4. r03-green refreshers, oldest-evidence first, preferring families
-#      whose code was touched this round (media/ahash decode-cache) and
-#      the heavyweight dedup/ANN families.
-# Every query NOT in the window still runs against its DuckDB oracle on
-# every pytest run (tests/test_queries_oracle.py parameterizes over the
-# ENTIRE registry), and the overflow set below is all r03-green — no
-# query is unverified, only driver-row-stale.
-_R05_WINDOW = [
-    # priority 1: the red r04 row, re-proving the ANSI fix
-    "crawl_trap_detection",
-    # priority 2: the 13 never-driver-checked queries
-    "text_winnow_fingerprints",
-    "text_winnow_fingerprint_pairs",
-    "crawl_redirect_resolve",
-    "crawl_novelty_goodturing",
-    "crawl_adaptive_delay",
-    "crawl_robots_wildcards",
-    "crawl_surt_keys",
-    "crawl_url_resolve",
-    "graph_hits_scores",
-    "graph_opic_cash",
-    "webtext_warc_records",
-    "text_boilerplate_density",
-    "text_source_reputation",
-    # priority 3: new r05 queries (each replaced one tail refresher
-    # below to keep the window at exactly 50; the displaced
-    # graph_domain_rank / crawl_tier_admission / crawl_smart_retry_terms
-    # / crawl_url_canonicalize / ann_srp_bucket_stats /
-    # ann_ivf_list_stats / text_bottomk_sketch / text_keyword_extract
-    # are all r03-green)
-    "sample_reservoir_weighted",
-    "graph_triangle_count",
-    "text_decontaminate_embedding",
-    "crawl_bandit_ucb",
-    "graph_label_propagation",
-    "crawl_shard_rendezvous",
-    "sample_holdout_split",
-    "text_char_entropy",
-    # priority 3 (cont.): roundseven's five, displacing five more
-    # r03-green refreshers (ann_recall_at_k / text_stats /
-    # text_lang_confusion / text_token_bpe / crawl_fetch_decision)
-    "crawl_url_template_mining",
-    "graph_kcore",
-    "sketch_spacesaving_topk",
-    "crawl_latency_anomaly",
-    "text_phrase_postings",
-    # priority 3 (cont.): roundeight's four, displacing four more
-    # r03-green refreshers (ann_srp_multiprobe_topk / ann_ivf_topk /
-    # dedup_embedding_cosine_pairs / dedup_embedding_srp_pairs)
-    "stats_poisson_bootstrap",
-    "crawl_ip_range_join",
-    "text_readability_score",
-    "text_mojibake_detect",
-    "text_bm25_topk",
-    "store_zorder_keys",
-    "store_zonemap_pruning",
-    "profile_table_stats",
-    "sample_neyman_allocation",
-    "dedup_keyword_typos",
-    # priority 3 (cont.): roundten's four, displacing four more
-    # r03-green refreshers (dedup_perceptual_ahash_jpeg /
-    # dedup_simhash_hamming / dedup_ngram_jaccard_pairs /
-    # text_repetition_quality — each family keeps at least one
-    # in-window representative)
-    "stats_gini_concentration",
-    "stats_ks_drift",
-    "crawl_conditional_get",
-    "dedup_cluster_canonical",
-    # priority 3 (cont.): roundeleven's four, displacing four more
-    # r03-green refreshers (media_dup_decision / dedup_exact /
-    # ann_cosine_topk / crawl_politeness_admission — ahash + minhash
-    # keep in-window representatives; politeness has the streaming
-    # parity pytest every run)
-    "dedup_containment_bottomk",
-    "graph_cocitation_similarity",
-    "crawl_hostload_ewma",
-    "stats_cusum_changepoint",
-    # priority 3 (cont.): roundtwelve's four, displacing the last
-    # refreshers except crawl_seen_anti_join (dedup_perceptual_ahash /
-    # dedup_minhash_lsh_pairs / crawl_priority_order /
-    # crawl_serp_seeding — all r03-green, all oracle+ANSI-swept every
-    # pytest run)
-    "crawl_fairness_jains",
-    "text_zipf_fit",
-    "store_compaction_plan",
-    "stats_capture_recapture",
-    # priority 4: r03-green refresher — THE core op keeps a fresh row
-    "crawl_seen_anti_join",
-]
-assert len(_R05_WINDOW) == 50, len(_R05_WINDOW)
-assert len(set(_R05_WINDOW)) == 50
-# Reorder: window entries first (in window order), overflow keeps its
-# registration order after them.
-_overflow = {n: REGISTRY.pop(n) for n in list(REGISTRY) if n not in set(_R05_WINDOW)}
-_windowed = {n: REGISTRY.pop(n) for n in _R05_WINDOW}
-REGISTRY.update(_windowed)
-REGISTRY.update(_overflow)
-del _overflow, _windowed
 
 __all__ = ["REGISTRY", "Query", "register"]

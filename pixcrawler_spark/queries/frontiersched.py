@@ -1,29 +1,21 @@
-"""Frontier-scheduling queries (round-4 late / r05 window candidates):
-redirect-chain resolution, Good-Turing discovery-yield estimation, and
-latency-adaptive politeness delays.
+"""Frontier-scheduling queries (round-4 late candidates): Good-Turing
+discovery-yield estimation and latency-adaptive politeness delays.
 
-Three decisions a 10^10-url frontier makes BEFORE spending a fetch:
+Two decisions a 10^10-url frontier makes BEFORE spending a fetch:
 
-1. *What is this url, really?* Redirect aliases must collapse to their
-   terminal url before the seen-set join or every alias is crawled
-   once (operators/redirects.py — pointer doubling, log-hop joins).
-   Reference analog: the downloader's requests session follows 3xx
-   per-request (backend downloader) — sequential and per-url; here the
-   whole frontier resolves set-at-a-time.
-2. *Which domains still yield NEW content?* Good-Turing's missing-mass
+1. *Which domains still yield NEW content?* Good-Turing's missing-mass
    estimate N1/N from per-url re-discovery counts: a domain whose
    outlink observations are mostly singletons is still expanding, one
    that re-discovers the same urls is saturated. Drives the per-domain
    budget (the reference re-queries engines blind, with a fixed
    max_images cap per keyword — builder core's retry loop).
-3. *How fast may we hit it?* robots crawl-delay is a floor, not a
+2. *How fast may we hit it?* robots crawl-delay is a floor, not a
    truth; production crawlers adapt to OBSERVED latency. Per-domain
    exact p50/p95 -> delay = clamp(2 x p95) — slow hosts get backoff
    before they start erroring, fast hosts aren't idled on a default.
 
-All three are pure built-in-expression plans (zero Python in the hot
-path) with DuckDB oracles — the redirect one a recursive CTE, the
-walk-vs-doubling equivalence being exactly what the oracle certifies.
+Both are pure built-in-expression plans (zero Python in the hot path)
+with DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -31,82 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pixcrawler_spark.operators.redirects import resolve_redirects
 from pixcrawler_spark.queries.registry import register
 from pixcrawler_spark.sources.tables import load_table
 
 __all__: list[str] = []
-
-
-# ---------------------------------------------------------------------------
-# crawl_redirect_resolve — functional-graph chain resolution
-# ---------------------------------------------------------------------------
-# Synthetic redirect map over the dense orderkey space n = 0..N-1
-# (o_orderkey is dense in the fixtures; no row_number needed):
-#   n % 10 != 0          : 'u<n>' redirects to 'u<n-1>'   (chains <= 9)
-#   n % 1000 == 555      : override -> 'u<n+1>'; since n+1 % 10 == 6
-#                          redirects back to 'u<n>', every x555/x556
-#                          pair is a 2-cycle, and x557..x559 are chains
-#                          that FLOW INTO the cycle (both trap shapes).
-#   n % 10 == 0          : terminal.
-# 'u1' -> 'u0' exercises a dst that is terminal by absence.
-_REDIRECT_ORACLE = """
-WITH RECURSIVE edges AS (
-  SELECT 'u' || CAST(o_orderkey AS VARCHAR) AS src,
-         'u' || CAST(CASE WHEN o_orderkey % 1000 = 555
-                          THEN o_orderkey + 1
-                          ELSE o_orderkey - 1 END AS VARCHAR) AS dst
-  FROM orders WHERE o_orderkey % 10 <> 0
-),
-walk(url, cur, hops) AS (
-  SELECT 'u' || CAST(o_orderkey AS VARCHAR),
-         'u' || CAST(o_orderkey AS VARCHAR), 0
-  FROM orders
-  UNION ALL
-  SELECT w.url, e.dst, w.hops + 1
-  FROM walk w JOIN edges e ON w.cur = e.src
-  WHERE w.hops < 40
-),
-term AS (
-  SELECT w.url, w.cur AS final_url, w.hops
-  FROM walk w LEFT JOIN edges e ON w.cur = e.src
-  WHERE e.src IS NULL
-)
-SELECT o.url AS url,
-       COALESCE(t.final_url, '') AS final_url,
-       CAST(COALESCE(t.hops, -1) AS INT) AS hops,
-       (t.url IS NULL) AS is_cycle
-FROM (SELECT 'u' || CAST(o_orderkey AS VARCHAR) AS url FROM orders) o
-LEFT JOIN term t ON o.url = t.url
-"""
-
-
-@register(
-    "crawl_redirect_resolve",
-    oracle=_REDIRECT_ORACLE,
-    doc="Resolve every frontier url through the redirect map to its "
-    "terminal url by pointer doubling: ceil(log2(chain)) self-joins "
-    "instead of one join per hop, cycles (2-cycles AND chains flowing "
-    "into them) reported as is_cycle instead of looping. The oracle "
-    "is the naive one-hop-per-step recursive CTE — certifying the "
-    "doubling plan computes the same fixpoint.",
-)
-def crawl_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    url = F.concat(F.lit("u"), F.col("o_orderkey").cast("string"))
-    nodes = o.select(url.alias("url"))
-    edges = o.where(F.col("o_orderkey") % 10 != 0).select(
-        url.alias("src"),
-        F.concat(
-            F.lit("u"),
-            F.when(
-                F.col("o_orderkey") % 1000 == 555, F.col("o_orderkey") + 1
-            )
-            .otherwise(F.col("o_orderkey") - 1)
-            .cast("string"),
-        ).alias("dst"),
-    )
-    return resolve_redirects(nodes, edges)
 
 
 # ---------------------------------------------------------------------------

@@ -654,6 +654,13 @@ def test_config_validation():
         CrawlConfig(seeds=[]).validate()
     with pytest.raises(ValueError):
         CrawlConfig(seeds=["x"], engines=("nope",)).validate()
+    with pytest.raises(ValueError):
+        CrawlConfig(seeds=["x"], engines=()).validate()
+    with pytest.raises(ValueError):
+        CrawlConfig(seeds=["x"], n_buckets=0).validate()
+    for round_len_s in (0.0, -1.0):
+        with pytest.raises(ValueError):
+            CrawlConfig(seeds=["x"], round_len_s=round_len_s).validate()
 
 
 def test_retry_ladder_matches_oracle(retry_run, retry_oracle):

@@ -1,8 +1,9 @@
-"""Relative-outlink resolution wired into the crawl round loop
-(cfg.resolve_relative): a corpus whose same-domain hrefs are rewritten
-to root-relative form must crawl EXACTLY the same url set as the
-original absolute-href corpus once resolution is on — and the flag is
-a proven pass-through on absolute links."""
+"""Relative-outlink resolution in the crawl round loop: the engine
+resolves every href against its page url, so a corpus whose
+same-domain hrefs are rewritten to root-relative form crawls EXACTLY
+the seen set the pandas oracle computes on the original absolute-href
+corpus. (On absolute hrefs resolution is a pass-through; the
+tests/test_crawl.py oracle checks cover that.)"""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from pixcrawler_spark.fixtures import (
 )
 from pixcrawler_spark.plans.crawl import CrawlConfig, CrawlEngine
 from pixcrawler_spark.sources.tables import TableStore
+from tests.oracle import CrawlOracle
 
 ROWS = 600
 SEED = 11
@@ -66,53 +68,27 @@ def seeds():
     return seed_urls(generate_pages(FixtureSpec(rows=ROWS, seed=SEED)), k=6)
 
 
-def _run(spark, pages_dir, tmp_path, seeds, **overrides):
-    kwargs = dict(seeds=seeds, max_depth=2, max_rounds=3, round_len_s=2.0)
-    kwargs.update(overrides)
-    eng = CrawlEngine(
-        spark,
-        f"{pages_dir}/pages.parquet",
-        f"{pages_dir}/robots.parquet",
-        TableStore(spark, str(tmp_path / "store")),
-        CrawlConfig(**kwargs),
-    )
-    eng.run()
-    return eng
-
-
-def _seen(eng):
-    return {r["url"] for r in eng.store.read("seen").collect()}
-
-
-@pytest.fixture(scope="module")
-def baseline_seen(spark, fixture_dir, tmp_path_factory, seeds):
-    return _seen(
-        _run(spark, fixture_dir, tmp_path_factory.mktemp("base"), seeds)
-    )
-
-
-def test_flag_on_absolute_corpus_is_passthrough(
-    spark, fixture_dir, tmp_path, seeds, baseline_seen
-):
-    eng = _run(spark, fixture_dir, tmp_path, seeds, resolve_relative=True)
-    assert _seen(eng) == baseline_seen
+CFG = dict(max_depth=2, max_rounds=3, round_len_s=2.0)
 
 
 def test_relative_corpus_resolves_to_baseline_set(
-    spark, rel_fixture_dir, tmp_path, seeds, baseline_seen
+    spark, fixture_dir, rel_fixture_dir, tmp_path, seeds
 ):
-    eng = _run(
-        spark, rel_fixture_dir, tmp_path, seeds, resolve_relative=True
+    eng = CrawlEngine(
+        spark,
+        f"{rel_fixture_dir}/pages.parquet",
+        f"{rel_fixture_dir}/robots.parquet",
+        TableStore(spark, str(tmp_path / "store")),
+        CrawlConfig(seeds=seeds, **CFG),
     )
-    assert _seen(eng) == baseline_seen
-
-
-def test_relative_corpus_without_resolution_breaks(
-    spark, rel_fixture_dir, tmp_path, seeds, baseline_seen
-):
-    """Control: with the flag OFF, root-relative hrefs enqueue as
-    opaque strings that can never match the pages table — the crawl
-    drifts from the baseline, which is exactly the failure mode the
-    stage exists to prevent."""
-    eng = _run(spark, rel_fixture_dir, tmp_path, seeds)
-    assert _seen(eng) != baseline_seen
+    eng.run()
+    oracle = CrawlOracle(
+        pages_path=f"{fixture_dir}/pages.parquet",
+        robots_path=f"{fixture_dir}/robots.parquet",
+        seeds=seeds,
+        **CFG,
+    )
+    oracle.run()
+    assert {r["url"] for r in eng.store.read("seen").collect()} == set(
+        oracle.seen
+    )
